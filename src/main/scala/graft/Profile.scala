@@ -97,7 +97,4 @@ object Profile {
     }
     spark.stop()
   }
-
-  /** Register-on-session hook for ad-hoc use. */
-  def attach(spark: SparkSession): Unit = ()
 }

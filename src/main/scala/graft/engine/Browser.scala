@@ -16,7 +16,8 @@ import graft.query._
   * `filter → groupBy.agg → orderBy → offset/limit` — so Catalyst gets a fully
   * declarative plan: predicate pushdown to the parquet scan, column pruning,
   * two-phase HashAggregate, and whole-stage codegen are all automatic
-  * (SURVEY.md §4). Nothing here collects to the driver.
+  * (SURVEY.md §4). Only [[rolledFrame]] collects to the driver, and only
+  * an already-aggregated, capped result.
   */
 final class Browser(val model: CubeModel, val df: DataFrame) {
 
@@ -157,6 +158,25 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     }
   }
 
+  /** Cell order: the user's order first, then every remaining drilldown
+    * dim as the stable tie-breaker.
+    */
+  private def cellOrder(q: CubeQuery): Seq[Column] =
+    orderCols(q.orders) ++
+      q.drilldown.filterNot(d => q.orders.exists(_.key == d)).map(col(_).asc)
+
+  /** Whether `after=` continues an aggregate-ordered cell page (token
+    * `<aggValue>,<drilldown-key tuple>`); validates that shape.
+    */
+  private def aggOrdered(q: CubeQuery): Boolean = {
+    val ordered = q.after.nonEmpty && q.orders.nonEmpty
+    if (ordered) require(
+      q.orders.size == 1 && model.aggregate(q.orders.head.key).isDefined,
+      "keyset pagination with order= takes exactly one AGGREGATE order key " +
+        "(dim-ordered pages use the plain drilldown-key token)")
+    ordered
+  }
+
   // ---- entry points -----------------------------------------------------
 
   /** `GET /cube/<c>/aggregate` cells: drilldown grouping (HOWTO.md:57-67);
@@ -187,17 +207,13 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     * double-aggregate tokens are compared as the client received them.
     */
   def aggregate(q: CubeQuery, aggNames: Seq[String] = Nil): DataFrame = {
-    val aggOrdered = q.after.nonEmpty && q.orders.nonEmpty
     require(q.after.isEmpty || q.drilldown.nonEmpty,
       "keyset pagination (after=) needs a drilldown (the token is a drilldown-key tuple)")
-    if (aggOrdered) require(
-      q.orders.size == 1 && model.aggregate(q.orders.head.key).isDefined,
-      "keyset pagination with order= takes exactly one AGGREGATE order key " +
-        "(dim-ordered pages use the plain drilldown-key token)")
+    val afterAgg = aggOrdered(q)
     val cutBase = applyCuts(q.cuts)
     val dimNames = q.drilldown.map(model.requireDimension(_).name)
     val base = q.after match {
-      case Some(token) if !aggOrdered =>
+      case Some(token) if !afterAgg =>
         cutBase.filter(keysetStrictlyAfter(dimNames, keyParts(token, dimNames.size)))
       case _ => cutBase
     }
@@ -206,12 +222,10 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
       if (q.drilldown.isEmpty) base.agg(aggs.head, aggs.tail: _*)
       else base.groupBy(dimNames.map(col): _*).agg(aggs.head, aggs.tail: _*)
     val cellsAfter =
-      if (aggOrdered)
+      if (afterAgg)
         cells.filter(aggOrderedAfterPred(cells, dimNames, q.orders.head, q.after.get))
       else cells
-    // user order first, then all drilldown dims as the stable tie-breaker
-    val tieBreak = q.drilldown.filterNot(d => q.orders.exists(_.key == d)).map(col(_).asc)
-    paginate(cellsAfter, orderCols(q.orders) ++ tieBreak, q.page)
+    paginate(cellsAfter, cellOrder(q), q.page)
   }
 
   /** Ungrouped summary over the same cell (the `summary` part of the
@@ -233,9 +247,9 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     // plain single-level ROLLUP on purpose: this surface is LAZY, and the
     // declarative shape lets Catalyst prune aggregate expressions a
     // consumer doesn't read (a count() collapses it to the grouping
-    // skeleton). The eager always-fully-materialized paths (share,
-    // aggregateResponse) use [[mergeableRolled]] instead, where the
-    // two-level plan's cheaper full materialization always wins.
+    // skeleton). The eager always-fully-materialized path ([[rolledFrame]])
+    // uses [[mergeableRolled]] instead, where the two-level plan's cheaper
+    // full materialization always wins.
     val aggs = aggExprs(aggNames) :+
       grouping_id(dims: _*).cast(LongType).as("grouping_level")
     val rolled = base.rollup(dims: _*).agg(aggs.head, aggs.tail: _*)
@@ -246,96 +260,87 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
       col("grouping_level").asc +: q.drilldown.map(col(_).asc), q.page)
   }
 
-  /** One-pass HTTP aggregate response (the `GET /cube/<c>/aggregate` body):
-    * the same ROLLUP as [[aggregateWithSummary]], persisted so the summary
-    * row, the UNPAGED total cell count, and the ordered page are all served
-    * from one aggregation — an atomic snapshot (the three-separate-jobs
-    * alternative recomputes the scan per part and can see the cube change
-    * between them). The rollup result is as many rows as there are cells —
-    * already aggregated — so the persist is small and the count/page jobs
-    * over it are trivial; only the first action pays the scan+aggregate.
-    * Caller MUST invoke `release()` after consuming the frames.
-    */
   import Browser.{AggregateResponse, RolledFrame}
 
-  /** The page-independent half of an aggregate response: the persisted
-    * two-level frame (cells + grand row) for (cuts, drilldown, aggNames),
-    * plus the unpaged cell count. A SERVER caches this handle across
-    * requests so page N+1 of the same drilldown pages the materialized
-    * cells instead of re-running the scan + aggregation (the per-request
-    * cost drops to a sort+limit over an InMemoryRelation). `release()`
-    * unpersists; an in-flight page over a just-released frame silently
-    * recomputes from the plan (correct, slower), so callers need no
-    * refcounting.
+  /** The page-independent half of every served aggregate — the JSON and
+    * CSV `aggregate` bodies and `share=` — for (cuts, drilldown, aggNames):
+    * the summary (grand-total) row, the cells, and the UNPAGED cell count,
+    * all from ONE aggregation, so the three parts are an atomic snapshot
+    * (three independent jobs recompute the scan per part and can see the
+    * cube change between them).
+    *
+    * The plan keeps only the cells and the grand level, via
+    * [[mergeableRolled]] when every aggregate merges exactly, else a plain
+    * ROLLUP. Its result is CELLS-SIZED (the aggregation already
+    * happened), so one `limit(collectCap + 2).collect()` yields all three
+    * parts and the summary and cells come back as LocalRelations: one
+    * scan, one aggregation, no persist. Persisting instead paid the
+    * InMemoryRelation columnar cache build — measured at 3.6× the
+    * cost of the aggregation itself (4.3 s vs 1.1 s at sf0.1) — plus a
+    * count job and a summary job before the page. A joined-in broadcast
+    * of the grand row looks equivalent but is NOT: the rolled subtree
+    * would appear twice in one plan, `DeduplicateRelations` re-aliases
+    * the second occurrence, and cache substitution misses it (observed:
+    * 5-10× the expected a17 cost at sf0.1).
+    *
+    * Scale gate: a drilldown with more than `collectCap` cells must not
+    * land on the driver; past the cap the frame is persisted and tracked
+    * with [[CacheScope]] instead (cache build amortized over a genuinely
+    * large result), so the terminal-action owner's drain releases it.
+    * `release()` unpersists it early; for a collected frame it is a no-op.
+    * NOTE: eager — the probe job runs on call.
     */
-
-  def rolledFrame(q: CubeQuery, aggNames: Seq[String] = Nil): RolledFrame = {
+  def rolledFrame(q: CubeQuery, aggNames: Seq[String] = Nil,
+      collectCap: Int = Browser.ShareCollectCap): RolledFrame = {
     require(q.drilldown.nonEmpty, "rolledFrame needs a drilldown")
     val dimNames = q.drilldown.map(model.requireDimension(_).name)
-    val dims = dimNames.map(col)
-    val grand = (1L << dims.size) - 1
-    val rolled = mergeableRolled(applyCuts(q.cuts), dimNames, aggNames).getOrElse {
+    val grand = (1L << dimNames.size) - 1
+    val base = applyCuts(q.cuts)
+    val rolled = mergeableRolled(base, dimNames, aggNames).getOrElse {
+      val dims = dimNames.map(col)
       val aggs = aggExprs(aggNames) :+
         grouping_id(dims: _*).cast(LongType).as("grouping_level")
-      applyCuts(q.cuts).rollup(dims: _*).agg(aggs.head, aggs.tail: _*)
+      base.rollup(dims: _*).agg(aggs.head, aggs.tail: _*)
     }.filter(col("grouping_level") === 0 || col("grouping_level") === grand)
-      .persist()
-    // anything failing between persist() and handing release() to the
-    // caller must not leak the pinned cache entry — a long-running server
-    // would accumulate one materialized frame per malformed request
-    try {
-      val total = rolled.filter(col("grouping_level") === 0).count()
-      RolledFrame(rolled, dimNames, grand, total,
-        () => { rolled.unpersist(blocking = false); () })
-    } catch {
-      case e: Throwable =>
-        rolled.unpersist(blocking = false)
-        throw e
+    def summaryOf(levels: DataFrame) = levels.filter(col("grouping_level") === grand)
+      .drop("grouping_level").drop(dimNames: _*)
+    def cellsOf(levels: DataFrame) = levels.filter(col("grouping_level") === 0)
+      .drop("grouping_level")
+    val probe = rolled.limit(collectCap + 2).collect()
+    if (probe.length <= collectCap + 1) {
+      // ROLLUP over zero matching rows emits no grand row (and no cells):
+      // the summary frame is then empty, with its schema intact
+      val local = df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(probe: _*), rolled.schema)
+      val gl = rolled.schema.fieldIndex("grouping_level")
+      RolledFrame(summaryOf(local), cellsOf(local), dimNames,
+        probe.count(_.getLong(gl) == 0L), () => ())
+    } else {
+      val kept = CacheScope.persistTracked(rolled)
+      val cells = cellsOf(kept)
+      RolledFrame(summaryOf(kept), cells, dimNames, cells.count(),
+        () => { kept.unpersist(blocking = false); () })
     }
   }
 
   /** One page over a [[RolledFrame]] — all per-request work (order,
-    * offset/keyset pagination, summary split); never re-aggregates. The
-    * returned `release` is a NO-OP: the frame's owner (the caller or a
-    * server-side cache) controls its lifetime.
+    * offset/keyset pagination); never re-aggregates.
     */
   def pageOf(rf: RolledFrame, q: CubeQuery): AggregateResponse = {
-    val aggOrdered = q.after.nonEmpty && q.orders.nonEmpty
-    if (aggOrdered) require(
-      q.orders.size == 1 && model.aggregate(q.orders.head.key).isDefined,
-      "keyset pagination with order= takes exactly one AGGREGATE order key " +
-        "(dim-ordered pages use the plain drilldown-key token)")
-    val summaryDf = rf.rolled.filter(col("grouping_level") === rf.grand)
-      .drop("grouping_level").drop(rf.dimNames: _*)
-    val tieBreak = q.drilldown.filterNot(d => q.orders.exists(_.key == d)).map(col(_).asc)
-    val cellsLevel = rf.rolled.filter(col("grouping_level") === 0)
-      .drop("grouping_level")
     // `after=` keyset page over the CELLS (summary + total stay global):
-    // the response needs the full rollup anyway, so the token filters the
-    // tiny cached cell frame — depth-independent, no top-(offset+limit).
-    // With order=<aggregate> the token is (order value, key tuple) and
-    // the filter applies in that order instead of the drilldown-key one.
+    // the token filters the cells-sized frame — depth-independent, no
+    // top-(offset+limit). With order=<aggregate> the token is (order
+    // value, key tuple) and the filter applies in that order instead of
+    // the drilldown-key one.
     val cellsAfter = q.after match {
-      case Some(token) if aggOrdered => cellsLevel.filter(
-        aggOrderedAfterPred(cellsLevel, rf.dimNames, q.orders.head, token))
-      case Some(token) => cellsLevel.filter(
+      case Some(token) if aggOrdered(q) => rf.cells.filter(
+        aggOrderedAfterPred(rf.cells, rf.dimNames, q.orders.head, token))
+      case Some(token) => rf.cells.filter(
         keysetStrictlyAfter(rf.dimNames, keyParts(token, rf.dimNames.size)))
-      case None => cellsLevel
+      case None => rf.cells
     }
-    val cellsDf = paginate(cellsAfter, orderCols(q.orders) ++ tieBreak, q.page)
-    AggregateResponse(summaryDf, cellsDf, rf.totalCellCount, () => ())
-  }
-
-  def aggregateResponse(q: CubeQuery, aggNames: Seq[String] = Nil): AggregateResponse = {
-    val rf = rolledFrame(q, aggNames)
-    try {
-      val page = pageOf(rf, q)
-      page.copy(release = rf.release)
-    } catch {
-      case e: Throwable =>
-        rf.release()
-        throw e
-    }
+    AggregateResponse(rf.summary, paginate(cellsAfter, cellOrder(q), q.page),
+      rf.totalCellCount)
   }
 
   /** `GET /cube/<c>/fact/<id>` — single-fact lookup by the cube's factKey
@@ -473,12 +478,11 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
       else base.select(preKeys: _*).distinct()
     val dims = dimNames.map(col)
     val fCols = finals.result()
-    // Both consumers (share, aggregateResponse) keep ONLY the cells and
-    // the grand row, so a ROLLUP computes n−1 levels that are thrown
-    // away AND pays Spark's Expand twice over the rows-scale pre frame
-    // (×2 for the levels, ×2 again to split the distinct aggregate from
-    // the mergeable ones — r13 profile: 23.1 s vs the union's 7.4 s on
-    // 10× data). Instead: one merge keyed by the dims (the cells), one
+    // rolledFrame keeps ONLY the cells and the grand row, so a ROLLUP
+    // computes n−1 levels that are thrown away AND pays Spark's Expand
+    // twice over the rows-scale pre frame (×2 for the levels, ×2 again
+    // to split the distinct aggregate from the mergeable ones — r13
+    // profile: 23.1 s vs the union's 7.4 s on 10× data). Instead: one merge keyed by the dims (the cells), one
     // global merge (the grand row), unioned in ONE plan — the pre
     // aggregation ends in an exchange that appears identically under
     // both branches, so ReusedExchange computes the scan + partial
@@ -504,66 +508,20 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
   }
 
   /** Percentage-of-total (SURVEY.md A17, YAML_STATIC_PART_APC:23-27): each
-    * cell's aggregate divided by the summary total, from ONE ROLLUP pass —
-    * the grand-total row of the same rollup that yields the cells supplies
-    * the denominator, so the cube is scanned and aggregated once (the
-    * two-independent-jobs shape paid the scan twice and could see the cube
-    * change between them), and the result stays correct for
-    * non-decomposable aggregates (count_distinct, stddev) where re-summing
-    * cells would be wrong.
-    *
-    * The rolled frame is CELLS-SIZED (cells + one grand row — the
-    * aggregation already happened), so it is collected ONCE and the cells
-    * frame is rebuilt as a LocalRelation via `createDataFrame`: one scan,
-    * one aggregation job, no persist. The round-4 shape persisted the
-    * rollup instead and paid the InMemoryRelation columnar cache build —
-    * judge-measured 3.6× the cost of the aggregation itself (4.3 s vs
-    * 1.1 s at sf0.1) on every `share=` request. A joined-in broadcast
-    * branch looks equivalent but is NOT: the rolled subtree would then
-    * appear twice in one plan, `DeduplicateRelations` re-aliases the
-    * second occurrence, and cache substitution misses it — the broadcast
-    * side silently re-scans and re-aggregates the cube (observed: 5-10×
-    * the expected a17 cost at sf0.1).
-    *
-    * Scale gate: a drilldown with more than `collectCap` groups must not
-    * land on the driver, so the collect probes `collectCap + 2` rows; past
-    * the cap it falls back to the round-4 tracked-persist shape (cache
-    * build amortized over a genuinely large result). The HTTP path caps
-    * pages at 500 cells, so the server never takes the fallback.
-    * NOTE: this makes the method eager (one Spark job runs on call).
+    * cell's aggregate divided by the summary total. Both come from the
+    * same [[rolledFrame]], so the cube is scanned and aggregated once and
+    * the result stays correct for non-decomposable aggregates
+    * (count_distinct, stddev) where re-summing cells would be wrong. The
+    * share column is added before the page's sort, so `order=<pctName>`
+    * works. Eager, like [[rolledFrame]].
     */
   def aggregateWithShare(q: CubeQuery, aggName: String, pctName: String,
       collectCap: Int = Browser.ShareCollectCap): DataFrame = {
-    require(q.drilldown.nonEmpty, "aggregateWithShare needs a drilldown")
-    val dimNames = q.drilldown.map(d => model.requireDimension(d).name)
-    val dims = dimNames.map(col)
-    val grand = (1L << dims.size) - 1
-    val rolledPlan = mergeableRolled(applyCuts(q.cuts), dimNames).getOrElse {
-      val aggs = aggExprs() :+
-        grouping_id(dims: _*).cast(LongType).as("grouping_level")
-      applyCuts(q.cuts).rollup(dims: _*).agg(aggs.head, aggs.tail: _*)
-    }.filter(col("grouping_level") === 0 || col("grouping_level") === grand)
-    val probe = rolledPlan.limit(collectCap + 2).collect()
-    val (totalVal, cells) =
-      if (probe.length <= collectCap + 1) {
-        val schema = rolledPlan.schema
-        val glIdx = schema.fieldIndex("grouping_level")
-        // ROLLUP over zero matching rows emits no grand row → no cells
-        // either; the null literal keeps the (empty) frame's schema intact
-        val total = probe.find(_.getLong(glIdx) == grand)
-          .map(_.get(schema.fieldIndex(aggName))).orNull
-        val cellRows = java.util.Arrays.asList(probe.filter(_.getLong(glIdx) == 0L): _*)
-        (total, df.sparkSession.createDataFrame(cellRows, schema).drop("grouping_level"))
-      } else {
-        val rolled = CacheScope.persistTracked(rolledPlan)
-        val total = rolled.filter(col("grouping_level") === grand)
-          .select(col(aggName)).collect().headOption.map(_.get(0)).orNull
-        (total, rolled.filter(col("grouping_level") === 0).drop("grouping_level"))
-      }
-    val shared = cells.withColumn(pctName,
-      (col(aggName) / lit(totalVal) * lit(100.0)).cast("double"))
-    val tieBreak = q.drilldown.filterNot(d => q.orders.exists(_.key == d)).map(col(_).asc)
-    paginate(shared, orderCols(q.orders) ++ tieBreak, q.page)
+    val rf = rolledFrame(q, collectCap = collectCap)
+    val total = rf.summary.select(col(aggName)).collect().headOption.map(_.get(0)).orNull
+    val shared = rf.cells.withColumn(pctName,
+      (col(aggName) / lit(total) * lit(100.0)).cast("double"))
+    pageOf(rf.copy(cells = shared), q).cells
   }
 
   /** Split a fact id / continuation token into key parts (single-column
@@ -699,20 +657,20 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
 
 object Browser {
 
-  /** See [[Browser.aggregateResponse]]. Top-level (not path-dependent) so
-    * a server can hold frames from many Browser instances in one cache.
+  /** See [[Browser.rolledFrame]]. Top-level (not path-dependent) so a
+    * server can hold frames from many Browser instances in one cache.
     */
+  final case class RolledFrame(summary: DataFrame, cells: DataFrame,
+      dimNames: Seq[String], totalCellCount: Long, release: () => Unit)
+
+  /** One page of an aggregate response, see [[Browser.pageOf]]. */
   final case class AggregateResponse(summary: DataFrame, cells: DataFrame,
-      totalCellCount: Long, release: () => Unit)
+      totalCellCount: Long)
 
-  /** See [[Browser.rolledFrame]]. Top-level for the same reason. */
-  final case class RolledFrame(rolled: DataFrame, dimNames: Seq[String],
-      grand: Long, totalCellCount: Long, release: () => Unit)
-
-  /** Max drilldown groups [[Browser.aggregateWithShare]] will collect to
-    * the driver before falling back to the persisted-rollup shape. Cells
-    * are one narrow row per group (dims + a handful of aggregates), so
-    * 100k rows is a few MB of driver heap — far below the point where the
+  /** Max drilldown cells [[Browser.rolledFrame]] will collect to the
+    * driver before falling back to the persisted shape. Cells are one
+    * narrow row per group (dims + a handful of aggregates), so 100k rows
+    * is a few MB of driver heap — far below the point where the
     * InMemoryRelation cache build it avoids would pay for itself.
     */
   val ShareCollectCap: Int = 100000

@@ -26,8 +26,9 @@ import org.apache.spark.sql.Dataset
 object CacheScope {
   // The registry is session-global; a query registers frames from its own
   // (single) thread and the runner drains from that same thread after the
-  // terminal action (Bench/Verify are sequential; GraftServer's cube
-  // surface never registers frames). Each tracked frame records its
+  // terminal action (Bench/Verify are sequential; GraftServer registers
+  // only a past-the-cap aggregate's rollup, on the request's thread, and
+  // drains per request). Each tracked frame records its
   // registering thread and [[drain]] only releases the CALLING thread's
   // frames — so if concurrently-driven code paths ever use tracked
   // operators, one query's drain cannot unpersist frames another query is

@@ -6,7 +6,8 @@ import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import graft.query.QueryParser
+import graft.engine.Browser
+import graft.query.{CubeQuery, QueryParser}
 import graft.registry.CubeRegistry
 
 /** Thin HTTP JSON facade over the cube engine — the Spark-native stand-in
@@ -42,16 +43,16 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
     recordLimit: Int = 500) {
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
-  server.setExecutor(Executors.newFixedThreadPool(4))
+  // kept so stop() can end its (non-daemon) workers: HttpServer.stop
+  // does not, and they would keep the JVM from exiting
+  private val pool = Executors.newFixedThreadPool(4)
+  server.setExecutor(pool)
   server.createContext("/", (ex: HttpExchange) => handle(ex))
 
   def start(): Unit = server.start()
   def stop(): Unit = {
     server.stop(0)
-    frameCache.synchronized {
-      frameCache.values().forEach(_.release())
-      frameCache.clear()
-    }
+    pool.shutdown()
   }
   def boundPort: Int = server.getAddress.getPort
 
@@ -92,56 +93,44 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
 
   // ---- drilldown frame cache --------------------------------------------
 
-  /** LRU cache of PERSISTED two-level aggregate frames keyed by
+  /** LRU cache of collected [[Browser.rolledFrame]]s keyed by
     * (generation, cube, cuts, drilldown): page N+1 of the same drilldown
-    * — any page=, pagesize=, order=, after= — pages the materialized
-    * cells instead of re-running the scan + aggregation, so deep
-    * dashboard paging costs a sort+limit over an InMemoryRelation
-    * instead of the cube aggregation. Response bytes are unchanged (the
-    * per-page work runs on exactly the frame the one-shot path builds).
-    * Entries pin one cells-sized cached frame each (bounded by the cap);
-    * eviction, stale generations, and `stop()` unpersist via
-    * `release()`. An in-flight page over a just-released frame silently
-    * recomputes from the plan — correct, slower — so no refcounting.
-    * `nocache=1` bypasses this cache too (the compute-path hatch).
+    * — any page=, pagesize=, order=, after= — pages the cells already on
+    * the driver instead of re-running the scan + aggregation, so deep
+    * dashboard paging costs a sort+limit over a LocalRelation. Response
+    * bytes are unchanged (the per-page work runs on exactly the frame the
+    * uncached path builds). Entries are driver-heap rows: at most
+    * `FrameCacheCap` entries holding at most `Browser.ShareCollectCap`
+    * cells in total (plus one summary row each) — least-recently-used
+    * entries are evicted past either bound, and a persisted (past-the-cap)
+    * frame is never admitted: its request's CacheScope drain releases it.
+    * Entries of an older registry generation are unreachable and age
+    * out. `nocache=1` bypasses this cache too (the compute-path hatch).
     */
   private val FrameCacheCap = 16
   private val frameCache =
-    new java.util.LinkedHashMap[String, graft.engine.Browser.RolledFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, graft.engine.Browser.RolledFrame]): Boolean =
-        if (size() > FrameCacheCap) { e.getValue.release(); true } else false
-    }
+    new java.util.LinkedHashMap[String, Browser.RolledFrame](16, 0.75f, true)
 
-  private def rolledFor(cube: String, b: graft.engine.Browser,
-      q: graft.query.CubeQuery,
-      noCache: Boolean): (graft.engine.Browser.RolledFrame, () => Unit) =
-    if (noCache) { val rf = b.rolledFrame(q); (rf, rf.release) }
+  private def rolledFor(cube: String, b: Browser, q: CubeQuery,
+      noCache: Boolean): Browser.RolledFrame =
+    if (noCache) b.rolledFrame(q)
     else {
-      val gen = registry.generation
-      val key = s"$gen|$cube|${q.cuts}|${q.drilldown}"
-      frameCache.synchronized(Option(frameCache.get(key))) match {
-        case Some(rf) => (rf, () => ())
-        case None =>
-          // built OUTSIDE the lock: concurrent first-pagers may race the
-          // same aggregation; the loser's frame is released, the winner's
-          // is shared — never a Spark job under the cache lock
-          val rf = b.rolledFrame(q)
-          val winner = frameCache.synchronized {
-            // sweep frames from older registry generations: unreachable
-            // (keys carry the generation) but still pinning memory
-            val it = frameCache.entrySet().iterator()
-            while (it.hasNext) {
-              val e = it.next()
-              if (!e.getKey.startsWith(s"$gen|")) { e.getValue.release(); it.remove() }
-            }
-            Option(frameCache.get(key)) match {
-              case Some(existing) => existing
-              case None => frameCache.put(key, rf); rf
-            }
+      val key = s"${registry.generation}|$cube|${q.cuts}|${q.drilldown}"
+      frameCache.synchronized(Option(frameCache.get(key))).getOrElse {
+        // built OUTSIDE the lock: concurrent first-pagers may race the
+        // same aggregation (the last one's frame stays) — never a Spark
+        // job under the cache lock
+        val rf = b.rolledFrame(q)
+        if (rf.totalCellCount <= Browser.ShareCollectCap) frameCache.synchronized {
+          frameCache.put(key, rf)
+          var cells = frameCache.values().stream().mapToLong(_.totalCellCount).sum()
+          val lru = frameCache.values().iterator()
+          while (frameCache.size > FrameCacheCap || cells > Browser.ShareCollectCap) {
+            cells -= lru.next().totalCellCount
+            lru.remove()
           }
-          if (!(winner eq rf)) rf.release()
-          (winner, () => ())
+        }
+        rf
       }
     }
 
@@ -206,10 +195,9 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
       // Per-REQUEST cache scope: a request is handled synchronously on one
       // executor thread, and CacheScope.drain() releases only the CALLING
       // thread's tracked frames — so this drains exactly what this request
-      // registered (the share= path's tracked rollup), never frames a
-      // concurrent request on another pool thread is still computing over.
-      // Endpoints that persist outside CacheScope (aggregateResponse)
-      // keep their own explicit release().
+      // registered (a past-the-cap aggregate's persisted rollup), never
+      // frames a concurrent request on another pool thread is still
+      // computing over.
       graft.engine.CacheScope.drain()
       ex.close()
     }
@@ -249,16 +237,15 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
       p.copy(pagesize = math.min(p.pagesize, recordLimit))))
   }
 
-  /** Summary + cells + total from Browser.aggregateResponse's single
-    * ROLLUP pass (one scan+aggregate per request, atomic snapshot —
-    * previously three independent Spark computations).
+  /** Summary + cells + total from one [[Browser.rolledFrame]] (one
+    * scan+aggregate per request, atomic snapshot) paged by
+    * [[Browser.pageOf]].
     *
     * `share=<aggregate>` (extension; the treemap frontend's
     * `total_percentage` relates_to semantics, YAML_STATIC_PART_APC:23-27,
     * served engine-side): each cell additionally carries
     * `<aggregate>_pct`, its share of the grand total, from
-    * Browser.aggregateWithShare's single ROLLUP pass. The tracked rollup
-    * cache is released by the per-request drain in [[handle]].
+    * Browser.aggregateWithShare over the same rolled frame.
     */
   private def aggregateJson(cube: String, params: Map[String, String]): String = {
     val b = registry.browser(cube)
@@ -277,27 +264,23 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
       val summary = b.summary(q).toJSON.collect().headOption.getOrElse("{}")
       s"""{"summary":$summary,"cells":[],"total_cell_count":1}"""
     } else {
-      val (rf, done) = rolledFor(cube, b, q,
-        params.get("nocache").contains("1"))
-      try {
-        val r = b.pageOf(rf, q)
-        // ROLLUP over zero matching rows emits no grand-total row; fall
-        // back to the ungrouped aggregate (count=0 / null sums) for the
-        // summary shape the no-drilldown path produces
-        val summary = r.summary.toJSON.collect().headOption
-          .orElse(b.summary(q).toJSON.collect().headOption)
-          .getOrElse("{}")
-        val cells = r.cells.toJSON.collect()
-        s"""{"summary":$summary,"cells":[${cells.mkString(",")}],""" +
-          s""""total_cell_count":${r.totalCellCount}}"""
-      } finally done()
+      val r = b.pageOf(rolledFor(cube, b, q, params.get("nocache").contains("1")), q)
+      // ROLLUP over zero matching rows emits no grand-total row; fall
+      // back to the ungrouped aggregate (count=0 / null sums) for the
+      // summary shape the no-drilldown path produces
+      val summary = r.summary.toJSON.collect().headOption
+        .orElse(b.summary(q).toJSON.collect().headOption)
+        .getOrElse("{}")
+      val cells = r.cells.toJSON.collect()
+      s"""{"summary":$summary,"cells":[${cells.mkString(",")}],""" +
+        s""""total_cell_count":${r.totalCellCount}}"""
     }
   }
 
   /** The validated share-of-total cells frame — ONE definition of the
     * share= guards and semantics for both the JSON and CSV renderings.
     */
-  private def shareCells(b: graft.engine.Browser, q: graft.query.CubeQuery,
+  private def shareCells(b: Browser, q: CubeQuery,
       aggName: String): org.apache.spark.sql.DataFrame = {
     if (q.drilldown.isEmpty) throw new IllegalArgumentException(
       "share= needs a drilldown (a grand total has no cells to share)")
@@ -364,12 +347,9 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
           val s = b.summary(q)
           csvRender(s.columns, s.collect())
         } else {
-          val (rf, done) = rolledFor(cube, b, q,
-            params.get("nocache").contains("1"))
-          try {
-            val r = b.pageOf(rf, q)
-            csvRender(r.cells.columns, r.cells.collect())
-          } finally done()
+          val cells = b.pageOf(
+            rolledFor(cube, b, q, params.get("nocache").contains("1")), q).cells
+          csvRender(cells.columns, cells.collect())
         }
     }
   }

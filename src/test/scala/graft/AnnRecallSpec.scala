@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import graft.operators.AnnFrontier
 
 /** Measures the recall@10-vs-latency FRONTIER of every approximate ANN
   * family against the exact brute-force top-10 (x10) — the production
   * parameters the x11/x13/x51/x52 queries use PLUS the recall-targeted
-  * parameters ([[AnnFrontier]]) — and publishes the table into
-  * COVERAGE.md. The oracle rows prove each path computes ITS OWN
+  * parameters ([[AnnFrontier]]) — and publishes the table as
+  * COVERAGE.md's ann-recall block ([[CoverageBlock]]). The oracle rows prove each path computes ITS OWN
   * contract exactly; this artifact records what retrieval quality each
   * speed/memory trade buys, and pins that ≥0.8 recall@10 is REACHABLE
   * in every family at documented cost (the r12 verdict's demand):
@@ -47,14 +45,10 @@ class AnnRecallSpec extends SparkSpec {
         f"$sfName ${r.family} ${r.params}: recall ${r.recall}%.2f below " +
           f"floor $floor")
     }
-    val path = Paths.get("COVERAGE.md")
-    val begin = "<!-- ann-recall:begin -->"
-    val end = "<!-- ann-recall:end -->"
     // generated rows stay OUT of stripMargin (it would eat their leading
     // table pipe)
-    val table =
-      s"""$begin
-         |Measured by AnnRecallSpec (AnnFrontier.sweep) against the exact
+    CoverageBlock.write("ann-recall",
+      s"""Measured by AnnRecallSpec (AnnFrontier.sweep) against the exact
          |brute-force top-10 (x10). Bold rows are the PRODUCTION points
          |the gated x11/x13/x51/x52 queries run since r14 (each ≥0.8
          |recall@10, spec-floored); the pre-r14 rows stay as the cheaper
@@ -70,14 +64,6 @@ class AnnRecallSpec extends SparkSpec {
           val b = if (r.targeted) "**" else ""
           f"| $sfName | ${r.family} | $b${r.params}$b | $b${r.recall}%.2f$b " +
             f"| ${r.seconds}%.2f |"
-        }.mkString("\n") + s"\n$end"
-    val current = new String(Files.readAllBytes(path), "UTF-8")
-    val updated =
-      if (current.contains(begin))
-        current.substring(0, current.indexOf(begin)) + table +
-          current.substring(current.indexOf(end) + end.length)
-      else
-        current + s"\n## Measured ANN recall (sf-scaled, spec-generated)\n\n$table\n"
-    Files.write(path, updated.getBytes("UTF-8")): Unit
+        }.mkString("\n")): Unit
   }
 }

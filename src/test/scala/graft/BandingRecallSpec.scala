@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import graft.operators.Dedup
 
 /** Measures MinHash-LSH banding RECALL against the exact all-pairs Jaccard
   * ground truth (x06) at the production parameters x07/x46/x47 use
   * (k=3 shingles, 4 bands × 3 rows, threshold 0.8), on real corpus scale
-  * factors — and publishes the numbers into COVERAGE.md's measured-recall
-  * block so the chosen (bands, rowsPerBand) carries evidence, not just
+  * factors — and publishes the numbers as COVERAGE.md's measured-recall
+  * block ([[CoverageBlock]]) so the chosen (bands, rowsPerBand) carries evidence, not just
   * the 1-(1-s^r)^b formula.
   *
   * The banded path exact-verifies its candidates, so precision vs the
@@ -57,30 +55,17 @@ class BandingRecallSpec extends SparkSpec {
       assert(r.recall >= 0.8,
         f"${r.sfName}: banding recall ${r.recall}%.3f below target 0.8")
     }
-    // publish the evidence into COVERAGE.md between the sentinel markers
-    // (created on first run); regenerating is idempotent
-    val path = Paths.get("COVERAGE.md")
-    val begin = "<!-- banding-recall:begin -->"
-    val end = "<!-- banding-recall:end -->"
-    // generated rows stay OUT of stripMargin (it would eat their leading
-    // table pipe)
-    val table =
-      s"""$begin
-         |Measured by BandingRecallSpec (exact x06 ground truth, x07 banded
+    // publish the evidence as COVERAGE.md's banding-recall block
+    // (generated rows stay OUT of stripMargin — it would eat their
+    // leading table pipe)
+    CoverageBlock.write("banding-recall",
+      s"""Measured by BandingRecallSpec (exact x06 ground truth, x07 banded
          |path, k=3, 4 bands x 3 rows, threshold 0.8). Candidates column =
          |distinct band-join pairs BEFORE exact verification.
          |
          || sf | docs | true pairs | banded found | recall | candidates | % of n(n-1)/2 |
          ||---|---|---|---|---|---|---|""".stripMargin + "\n" +
         rows.map(r => f"| ${r.sfName} | ${r.nDocs} | ${r.truth} | ${r.found} | ${r.recall}%.3f | ${r.candidates} | ${r.candidates / r.allPairs * 100}%.4f%% |")
-          .mkString("\n") + s"\n$end"
-    val current = new String(Files.readAllBytes(path), "UTF-8")
-    val updated =
-      if (current.contains(begin))
-        current.substring(0, current.indexOf(begin)) + table +
-          current.substring(current.indexOf(end) + end.length)
-      else
-        current + s"\n## Measured banding recall (sf-scaled, spec-generated)\n\n$table\n"
-    Files.write(path, updated.getBytes("UTF-8")): Unit
+          .mkString("\n")): Unit
   }
 }

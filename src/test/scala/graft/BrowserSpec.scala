@@ -178,11 +178,33 @@ class BrowserSpec extends SparkSpec {
   test("share-of-total past ShareCollectCap: persisted-rollup fallback, identical cells, cache released") {
     import graft.engine.CacheScope
     val q = CubeQuery(drilldown = Seq("l_returnflag", "l_linestatus"))
-    val viaCollect = li.aggregateWithShare(q, "price_sum", "pct").collect()
-    assert(viaCollect.length > 1, "need a multi-cell drilldown to exercise the cap")
-    // cap of 1 forces the distributed branch (probe sees cap+2 rows)
     CacheScope.drain()
     val before = CacheScope.trackedCount
+    // the served page (rolledFrame + pageOf) through both branches: the
+    // collected one tracks nothing, the fallback one frame until drained
+    val pq = q.copy(orders = QueryParser.parseOrders("price_sum:desc"),
+      page = Some(Page(1, 2)))
+    def page(cap: Int) = {
+      val rf = li.rolledFrame(pq, collectCap = cap)
+      val r = li.pageOf(rf, pq)
+      val parts = (r.summary.collect().map(_.toSeq).toSeq,
+        r.cells.collect().map(_.toSeq).toSeq, r.totalCellCount)
+      rf.release()
+      parts
+    }
+    val collectedPage = page(Browser.ShareCollectCap)
+    assert(CacheScope.trackedCount == before, "the collected branch must persist nothing")
+    val fallbackPage = page(1)
+    assert(CacheScope.trackedCount == before + 1,
+      "fallback must track its persisted rollup with CacheScope")
+    assert(fallbackPage == collectedPage)
+    assert(collectedPage._2.size == 2 && collectedPage._3 > 2)
+    CacheScope.drain()
+    assert(CacheScope.trackedCount == before)
+    val viaCollect = li.aggregateWithShare(q, "price_sum", "pct").collect()
+    assert(viaCollect.length > 1, "need a multi-cell drilldown to exercise the cap")
+    assert(CacheScope.trackedCount == before)
+    // cap of 1 forces the distributed branch (probe sees cap+2 rows)
     val viaFallback = li.aggregateWithShare(q, "price_sum", "pct", collectCap = 1)
     val fallbackRows = viaFallback.collect()
     // the fallback registered its persisted rollup for the owner's drain

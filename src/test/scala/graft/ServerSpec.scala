@@ -98,19 +98,42 @@ class ServerSpec extends SparkSpec {
 
   test("one-pass aggregate response matches the direct three-part composition") {
     // the ROLLUP-served response must byte-match what summary() +
-    // aggregate() + unpaged count would have produced independently
-    val (code, body) = get(
-      "/cube/lineitem/aggregate?drilldown=l_returnflag&order=n_items:desc&page=0&pagesize=2")
-    assert(code == 200)
-    val q = query.CubeQuery(drilldown = Seq("l_returnflag"),
-      orders = query.QueryParser.parseOrders("n_items:desc"),
-      page = Some(query.Page(0, 2)))
+    // aggregate() + unpaged count would have produced independently —
+    // through the frame cache and past it (nocache=1), for offset and
+    // keyset (after=) pages, for a nothing-matches cut, and as CSV
     val b = TestCubes.lineitem(spark, sf())
-    val summary = b.summary(q).toJSON.collect().head
-    val cells = b.aggregate(q).toJSON.collect().mkString(",")
-    val total = b.aggregate(q.copy(page = None, orders = Nil)).count()
-    assert(body ==
-      s"""{"summary":$summary,"cells":[$cells],"total_cell_count":$total}""")
+    def parsed(params: String) = query.QueryParser.parse(params.split('&').map { kv =>
+      val Array(k, v) = kv.split("=", 2); k -> java.net.URLDecoder.decode(v, "UTF-8") }.toMap)
+    def composed(params: String): String = {
+      val q = parsed(params)
+      val summary = b.summary(q).toJSON.collect().head
+      val cells = b.aggregate(q).toJSON.collect().mkString(",")
+      val total = b.aggregate(q.copy(page = None, orders = Nil, after = None)).count()
+      s"""{"summary":$summary,"cells":[$cells],"total_cell_count":$total}"""
+    }
+    Seq(
+      "drilldown=l_returnflag&order=n_items:desc&page=0&pagesize=2",
+      "drilldown=l_returnflag&order=n_items:desc&page=1&pagesize=2&nocache=1",
+      "drilldown=l_suppkey&after=3&pagesize=4",
+      "drilldown=l_suppkey&order=n_items:desc&after=999999999,-1&pagesize=4&nocache=1",
+      "drilldown=l_returnflag&cut=l_returnflag:ZZZ",
+      "drilldown=l_returnflag&cut=l_returnflag:ZZZ&nocache=1"
+    ).foreach { params =>
+      val (code, body) = get(s"/cube/lineitem/aggregate?$params")
+      assert(code == 200, params)
+      assert(body == composed(params), params)
+    }
+    Seq(
+      "drilldown=l_returnflag%7Cl_linestatus&order=price_sum:desc",
+      "drilldown=l_suppkey&after=3&pagesize=4&nocache=1"
+    ).foreach { params =>
+      val (code, body) = get(s"/cube/lineitem/aggregate?$params&format=csv")
+      assert(code == 200, params)
+      val cells = b.aggregate(parsed(params))
+      val expected = (cells.columns.toSeq +: cells.collect().toSeq.map(_.toSeq.map(
+        v => if (v == null) "" else v.toString))).map(_.mkString(",")).mkString("\r\n")
+      assert(body == expected, params)
+    }
   }
 
   test("GET fact/<id>: single fact by composite factKey; 404 when absent") {
@@ -124,8 +147,7 @@ class ServerSpec extends SparkSpec {
     // malformed id part on a typed key column: clean 404 via try_cast,
     // not an ANSI cast 500
     assert(get("/cube/lineitem/fact/abc,1")._1 == 404)
-    // a bad order key errors without wedging the server (the persisted
-    // rollup is released on the failure path)
+    // a bad order key errors without wedging the server
     assert(get("/cube/lineitem/aggregate?drilldown=l_returnflag&order=bogus:desc")._1 == 500)
     assert(get("/cube/lineitem/aggregate?drilldown=l_returnflag")._1 == 200)
   }
@@ -326,12 +348,12 @@ class ServerSpec extends SparkSpec {
   }
 
   test("share= endpoint: per-cell share-of-total, correct under concurrency (per-request cache scope)") {
-    // the share path uses a CacheScope-TRACKED operator
-    // (Browser.aggregateWithShare persists its rollup); the server drains
-    // per request. Per-thread draining means concurrent requests cannot
-    // unpersist each other's frames — responses must match the sequential
-    // baseline, shares must sum to 100, and no tracked frame may leak
-    // after the storm settles.
+    // every served aggregate (share= and plain, nocache=1 too) goes
+    // through Browser.rolledFrame, whose past-the-cap fallback is
+    // CacheScope-TRACKED; the server drains per request. Per-thread
+    // draining means concurrent requests cannot unpersist each other's
+    // frames — responses must match the sequential baseline, shares must
+    // sum to 100, and no tracked frame may leak after the storm settles.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -346,16 +368,17 @@ class ServerSpec extends SparkSpec {
       .findAllMatchIn(baseline).map(_.group(1).toDouble).toSeq
     assert(pcts.size == 3 && math.abs(pcts.sum - 100.0) < 1e-6,
       s"shares $pcts do not sum to 100")
-    val other = "/cube/orders/aggregate?drilldown=o_orderpriority&share=total_sum"
-    val otherBaseline = get(other)._2
-    val storm = Future.traverse(1 to 8) { i =>
-      Future(get(if (i % 2 == 0) path else other))
+    val paths = Seq(path,
+      "/cube/orders/aggregate?drilldown=o_orderpriority&share=total_sum",
+      "/cube/lineitem/aggregate?drilldown=l_suppkey&order=price_sum:desc&nocache=1",
+      "/cube/orders/aggregate?drilldown=o_orderpriority&format=csv&nocache=1")
+    val baselines = paths.map(get(_)._2)
+    val storm = Future.traverse((0 until 16).toVector) { i =>
+      Future((i % paths.size, get(paths(i % paths.size))))
     }
-    val all = Await.result(storm, 2.minutes)
-    all.zipWithIndex.foreach { case ((c, body), idx) =>
+    Await.result(storm, 2.minutes).foreach { case (p, (c, body)) =>
       assert(c == 200)
-      val expected = if ((idx + 1) % 2 == 0) baseline else otherBaseline
-      assert(body == expected, "concurrent share response diverged")
+      assert(body == baselines(p), s"concurrent response diverged: ${paths(p)}")
     }
     // the per-request drains released every tracked rollup: the storm
     // leaves no additional persisted frame behind
@@ -364,6 +387,26 @@ class ServerSpec extends SparkSpec {
     // share without a drilldown is a client error, not a 500
     assert(get("/cube/lineitem/aggregate?share=price_sum")._1 == 400)
     assert(get("/cube/lineitem/aggregate?drilldown=l_returnflag&share=nope")._1 == 400)
+  }
+
+  test("stop() ends the threads the server started (the JVM can exit)") {
+    import scala.jdk.CollectionConverters._
+    def liveNonDaemon(): Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && !t.isDaemon).toSet
+    val before = liveNonDaemon()
+    val s = new GraftServer(registry)
+    s.start()
+    (1 to 4).foreach { _ =>
+      val req = HttpRequest.newBuilder(
+        URI.create(s"http://localhost:${s.boundPort}/cubes")).GET().build()
+      assert(client.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+    }
+    s.stop()
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while ((liveNonDaemon() -- before).nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    val left = liveNonDaemon() -- before
+    assert(left.isEmpty, s"threads alive after stop(): ${left.map(_.getName)}")
   }
 
   test("unknown cube → 404; malformed query → 400") {

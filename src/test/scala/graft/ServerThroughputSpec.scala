@@ -2,14 +2,14 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.{Files, Paths}
 
 import graft.registry.CubeRegistry
 import graft.server.GraftServer
 
 /** Serving-throughput artifact: requests/sec and latency percentiles for
   * the HTTP facade at the reference's record-limit page size (500 cells,
-  * slicer.ini:9), published into COVERAGE.md next to the recall tables.
+  * slicer.ini:9), published as COVERAGE.md's server-throughput block
+  * ([[CoverageBlock]]) next to the recall tables.
   * ServerSpec proves a concurrent storm is CORRECT; this records how fast
   * the served path actually is, so regressions in the per-request
   * plan-build + collect cost are visible round over round.
@@ -72,9 +72,9 @@ class ServerThroughputSpec extends SparkSpec {
     // the reference record limit — a full slicer-sized page per request.
     // THREE tiers: cold (nocache=1 — the full scan+aggregate per request),
     // frame-cached (distinct page URLs over ONE drilldown — response cache
-    // misses, but the server reuses the persisted rolled frame, so each
-    // request is a sort+limit over the materialized cells), and the
-    // response-cache replay (repeat URL).
+    // misses, but the server reuses the collected rolled frame, so each
+    // request is a sort+limit over the cells already on the driver), and
+    // the response-cache replay (repeat URL).
     def cold(ps: Int) =
       s"/cube/lineitem/aggregate?drilldown=l_orderkey&page=0&pagesize=$ps&nocache=1"
     def page(ps: Int) =
@@ -98,33 +98,20 @@ class ServerThroughputSpec extends SparkSpec {
       f"frame-cache paging too slow: p95 ${frameM.p95}%.0f ms")
     assert(cachedM.rps > 50.0, f"cache path not serving: ${cachedM.rps}%.2f req/s")
 
-    val begin = "<!-- server-throughput:begin -->"
-    val end = "<!-- server-throughput:end -->"
-    val block =
-      s"""$begin
-         |Measured by ServerThroughputSpec on the live HTTP facade over the
+    CoverageBlock.write("server-throughput",
+      s"""Measured by ServerThroughputSpec on the live HTTP facade over the
          |sf0.001 lineitem cube, concurrency 4, after 3 warmup requests:
          |"cold" = 60 distinct 500-cell aggregate pages with nocache=1
          |(every request pays the scan + aggregation — the reference record
          |limit, slicer.ini:9); "frame-cached" = the same 60 distinct URLs
          |with the drilldown frame cache on (response-cache misses; each
-         |request pages the persisted rolled frame); "cached" = 200 repeats
+         |request pages the collected rolled frame); "cached" = 200 repeats
          |of one URL (the generation-stamped response-cache replay path).
          |
          || path | requests/sec | p50 | p95 | p99 |
          ||---|---|---|---|---|""".stripMargin + "\n" +
         f"| cold (nocache=1 compute) | ${coldM.rps}%.1f | ${coldM.p50}%.0f ms | ${coldM.p95}%.0f ms | ${coldM.p99}%.0f ms |%n" +
         f"| frame-cached paging | ${frameM.rps}%.1f | ${frameM.p50}%.0f ms | ${frameM.p95}%.0f ms | ${frameM.p99}%.0f ms |%n" +
-        f"| cached (replay) | ${cachedM.rps}%.0f | ${cachedM.p50}%.2f ms | ${cachedM.p95}%.2f ms | ${cachedM.p99}%.2f ms |%n" +
-        end
-    val p = Paths.get("COVERAGE.md")
-    val current = new String(Files.readAllBytes(p), "UTF-8")
-    val updated =
-      if (current.contains(begin))
-        current.substring(0, current.indexOf(begin)) + block +
-          current.substring(current.indexOf(end) + end.length)
-      else
-        current + s"\n## Server throughput (spec-generated)\n\n$block\n"
-    Files.write(p, updated.getBytes("UTF-8")): Unit
+        f"| cached (replay) | ${cachedM.rps}%.0f | ${cachedM.p50}%.2f ms | ${cachedM.p95}%.2f ms | ${cachedM.p99}%.2f ms |"): Unit
   }
 }
