@@ -1,5 +1,4 @@
 package graft
-import scala.util.chaining._
 
 import org.apache.spark.sql.SparkSession
 
@@ -283,7 +282,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val gateAttempts = awaitQuietBox(threshold = 2.0, maxAttempts = 20,
       sleepSec = 30)
     // ambient load BEFORE Spark starts: the end-of-run stamp includes the
@@ -294,20 +292,10 @@ object Bench {
     // floor (the floor is the min over the whole run: if the box was
     // contended even now, some later quiet-window probe will beat this)
     val probeBase = probeMs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .pipe(graft.engine.SessionTuning.apply)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession()
     try SparkEntry.queries("a03_summary")(spark, sfDir).count() // warmup
     catch { case _: Throwable => }
-    def argMatch(name: String): Boolean = args.isEmpty || args.exists(a =>
-      if (a.endsWith("*")) name.startsWith(a.dropRight(1)) else name == a)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => argMatch(q._1))
+    val selected = SparkEntry.select(args.toSeq)
     // pre-warm ONLY the memoized fit families the selection actually
     // consumes (untimed, cost reported as its own line item) — warming
     // every family made subset runs pay irrelevant fits (r11 advice)

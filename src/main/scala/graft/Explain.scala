@@ -1,9 +1,5 @@
 package graft
 
-import scala.util.chaining._
-
-import org.apache.spark.sql.SparkSession
-
 /** Plan dumper for the optimization rounds: writes `.explain("formatted")`
   * of each named SparkEntry query to `<outDir>/<query>_<tag>.txt` (the
   * judge-checkable plan artifacts under plans/r14/). Same session contract
@@ -16,20 +12,9 @@ object Explain {
     require(args.length >= 3, "usage: Explain <outDir> <tag> <query...>")
     val outDir = args(0); val tag = args(1); val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .pipe(graft.engine.SessionTuning.apply)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.GraftSession(logLevel = "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    def argMatch(name: String): Boolean = names.exists(a =>
-      if (a.endsWith("*")) name.startsWith(a.dropRight(1)) else name == a)
-    SparkEntry.queries.toSeq.sortBy(_._1).filter(q => argMatch(q._1))
+    SparkEntry.select(names.toSeq)
       .foreach { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)

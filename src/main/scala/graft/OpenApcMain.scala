@@ -33,14 +33,7 @@ object OpenApcMain {
     require(args.length >= 2, "usage: OpenApcMain <csvDir> <outDir> [port]")
     val (csvDir, outDir) = (args(0), args(1))
     val port = args.lift(2).map(_.toInt).getOrElse(8080)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession()
     val server = launch(spark, csvDir, outDir, port)
     println(s"graft OpenAPC server listening on port ${server.boundPort} " +
       s"(cubes + artifacts under $outDir)")

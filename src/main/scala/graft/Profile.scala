@@ -3,9 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import scala.util.chaining._
-
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): per-QUERY stage-level
   * attribution of where wall-clock actually goes — executor run time,
@@ -25,16 +22,7 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .pipe(graft.engine.SessionTuning.apply)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession()
 
     val stages = mutable.ArrayBuffer.empty[StageRow]
     val jobs = mutable.ArrayBuffer.empty[(Int, String)]
@@ -61,10 +49,7 @@ object Profile {
 
     spark.sparkContext.addSparkListener(listener)
 
-    def argMatch(name: String): Boolean = args.isEmpty || args.exists(a =>
-      if (a.endsWith("*")) name.startsWith(a.dropRight(1)) else name == a)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => argMatch(q._1))
+    val selected = SparkEntry.select(args.toSeq)
 
     // one untimed warmup so codegen/JIT lands outside the first profile
     try SparkEntry.queries("a03_summary")(spark, sfDir).count()

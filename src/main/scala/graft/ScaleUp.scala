@@ -61,14 +61,7 @@ object ScaleUp {
       s"unknown mode $mode")
     val distinct = mode != "neardup"
     val dense = mode == "dense"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession()
     val rep = reps(spark, factor)
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

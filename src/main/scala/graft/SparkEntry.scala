@@ -71,6 +71,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     aQueries ++ EtlQueries.queries ++ ExtensionQueries.queries
 
+  /** The [[queries]] that `patterns` name, sorted by name: exact names or
+    * prefix globs (`x8*`); no patterns selects every query. The one
+    * selector of the Bench, Profile and Explain command lines.
+    */
+  def select(patterns: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.sortBy(_._1).filter { case (name, _) =>
+      patterns.isEmpty || patterns.exists(p =>
+        if (p.endsWith("*")) name.startsWith(p.dropRight(1)) else name == p)
+    }
+
   private def aQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A1: facts scan + stable pagination (HOWTO.md:35-42)
     "a01_facts_page" -> ((s, dir) =>

@@ -1,7 +1,4 @@
 package graft
-import scala.util.chaining._
-
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,16 +10,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def selected(name: String): Boolean =
       only.forall(_.exists(name.contains))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .pipe(graft.engine.SessionTuning.apply)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession()
     Stage.enable() // staged-intermediate dumps feed the DuckDB oracle
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>

@@ -142,8 +142,18 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
 
   // ---- ordering / pagination -------------------------------------------
 
-  private def orderCols(orders: Seq[Order]): Seq[Column] =
-    orders.map(o => if (o.desc) col(o.key).desc else col(o.key).asc)
+  /** Sort columns for the `order=` keys, checked against the columns of
+    * `d`, the frame being sorted: an unknown key is a client error with a
+    * stable message, not an analyzer failure whose text embeds the plan's
+    * run-specific expression ids.
+    */
+  private def orderCols(d: DataFrame, orders: Seq[Order]): Seq[Column] =
+    orders.map { o =>
+      if (!d.columns.contains(o.key)) throw new IllegalArgumentException(
+        s"cube '${model.name}': cannot order by '${o.key}' " +
+          s"(has: ${d.columns.mkString(", ")})")
+      if (o.desc) col(o.key).desc else col(o.key).asc
+    }
 
   /** LIMIT/OFFSET without a total order is nondeterministic in a distributed
     * engine (the reference leans on Postgres heap order). We always extend
@@ -158,11 +168,11 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     }
   }
 
-  /** Cell order: the user's order first, then every remaining drilldown
-    * dim as the stable tie-breaker.
+  /** Order of the `cells` frame: the user's order first, then every
+    * remaining drilldown dim as the stable tie-breaker.
     */
-  private def cellOrder(q: CubeQuery): Seq[Column] =
-    orderCols(q.orders) ++
+  private def cellOrder(cells: DataFrame, q: CubeQuery): Seq[Column] =
+    orderCols(cells, q.orders) ++
       q.drilldown.filterNot(d => q.orders.exists(_.key == d)).map(col(_).asc)
 
   /** Whether `after=` continues an aggregate-ordered cell page (token
@@ -225,7 +235,7 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
       if (afterAgg)
         cells.filter(aggOrderedAfterPred(cells, dimNames, q.orders.head, q.after.get))
       else cells
-    paginate(cellsAfter, cellOrder(q), q.page)
+    paginate(cellsAfter, cellOrder(cellsAfter, q), q.page)
   }
 
   /** Ungrouped summary over the same cell (the `summary` part of the
@@ -339,7 +349,8 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
         keysetStrictlyAfter(rf.dimNames, keyParts(token, rf.dimNames.size)))
       case None => rf.cells
     }
-    AggregateResponse(rf.summary, paginate(cellsAfter, cellOrder(q), q.page),
+    AggregateResponse(rf.summary,
+      paginate(cellsAfter, cellOrder(cellsAfter, q), q.page),
       rf.totalCellCount)
   }
 
@@ -623,7 +634,7 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     // probe job never pays for itself; row-group pruning would only bite
     // on a key-sorted layout). Deep pagination scale is the keyset
     // `after=` path's job, so the plain global top-(offset+limit) stays.
-    val paged = paginate(base, orderCols(q.orders) ++ tieBreak, q.page)
+    val paged = paginate(base, orderCols(base, q.orders) ++ tieBreak, q.page)
     // `fields=` projection (cubes facts param): applied AFTER the sort —
     // the page order is over the full-row total order regardless of which
     // columns the client asked for, so pages stay stable across field sets

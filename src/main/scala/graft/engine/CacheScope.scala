@@ -38,7 +38,8 @@ object CacheScope {
 
   // Checkpoint RDDs registered by [[Ckpt]]: Dataset.unpersist is a
   // CacheManager no-op for checkpointed frames (their storage hangs off
-  // the RDD, not the cache), so they need their own release path.
+  // the RDD, not the cache), so they need their own release path
+  // (Ckpt.release: blocks plus a reliable checkpoint's files).
   private val trackedRdds =
     new ConcurrentLinkedQueue[(Thread, org.apache.spark.rdd.RDD[_])]()
 
@@ -70,7 +71,7 @@ object CacheScope {
     val itR = trackedRdds.iterator()
     while (itR.hasNext) {
       val e = itR.next()
-      if (e._1 eq me) { itR.remove(); e._2.unpersist(blocking = false) }
+      if (e._1 eq me) { itR.remove(); Ckpt.release(e._2) }
     }
   }
 
@@ -90,7 +91,7 @@ object CacheScope {
     val itR = trackedRdds.iterator()
     while (itR.hasNext) {
       val e = itR.next()
-      itR.remove(); e._2.unpersist(blocking = false)
+      itR.remove(); Ckpt.release(e._2)
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
@@ -17,9 +18,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     mode and on static clusters — and the wrong one under churn.
   *     `SPARK_GRAFT_CKPT=reliable` switches every barrier to a RELIABLE
   *     `checkpoint()` into `SPARK_GRAFT_CKPT_DIR` (default
-  *     <java.io.tmpdir>/graft-ckpt; point it at HDFS/object storage on a
-  *     real cluster), which survives executor loss at the cost of a
-  *     write+read through the checkpoint filesystem. Same plan shape
+  *     <java.io.tmpdir>/graft-ckpt on a local filesystem; required, and
+  *     pointed at HDFS/object storage, on a real cluster), which survives
+  *     executor loss at the cost of a write+read through the checkpoint
+  *     filesystem. Same plan shape
   *     (a leaf), same results, different durability.
   *
   *  2. LIFECYCLE. Checkpointed blocks are freed only when the driver GCs
@@ -27,9 +29,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     accumulates every query's materialized frames in executor storage
   *     (MEMORY_AND_DISK eviction churn) with no deterministic release.
   *     Every barrier is therefore registered with [[CacheScope]]; the
-  *     runner's per-query `drain()` unpersists the checkpoint RDDs
-  *     exactly like tracked persisted frames. Iterative loops
-  *     additionally release each superseded round eagerly via [[free]].
+  *     runner's per-query `drain()` releases the checkpoint RDDs (blocks,
+  *     and a reliable checkpoint's files) like tracked persisted frames.
+  *     Iterative loops additionally release each superseded round
+  *     eagerly via [[free]].
   */
 object Ckpt {
 
@@ -41,10 +44,22 @@ object Ckpt {
     sys.props.get("graft.ckpt").orElse(sys.env.get("SPARK_GRAFT_CKPT"))
       .exists(_.equalsIgnoreCase("reliable"))
 
+  /** Point reliable checkpoints at `SPARK_GRAFT_CKPT_DIR`, else at
+    * <java.io.tmpdir>/graft-ckpt — a fallback that is only durable on a
+    * local default filesystem. On a cluster filesystem a node-local
+    * tmpdir would defeat the point of reliable mode, so the barrier
+    * refuses instead.
+    */
   private def ensureCheckpointDir(df: DataFrame): Unit = {
     val sc = df.sparkSession.sparkContext
+    val dir = sys.env.get("SPARK_GRAFT_CKPT_DIR")
+    if (dir.isEmpty && !SessionTuning.defaultFsIsLocal(sc.hadoopConfiguration))
+      throw new IllegalStateException(
+        "SPARK_GRAFT_CKPT=reliable on a non-local default filesystem needs " +
+          "SPARK_GRAFT_CKPT_DIR: a checkpoint directory every executor can " +
+          "read (the java.io.tmpdir fallback is node-local)")
     if (sc.getCheckpointDir.isEmpty)
-      sc.setCheckpointDir(sys.env.getOrElse("SPARK_GRAFT_CKPT_DIR",
+      sc.setCheckpointDir(dir.getOrElse(
         s"${System.getProperty("java.io.tmpdir")}/graft-ckpt"))
   }
 
@@ -66,8 +81,21 @@ object Ckpt {
     * call on frames nothing will read again: a local checkpoint's blocks
     * are its only copy.
     */
-  def free(df: DataFrame): Unit =
-    internalRdd(df).foreach(_.unpersist(blocking = false))
+  def free(df: DataFrame): Unit = internalRdd(df).foreach(release)
+
+  /** Release a barrier's storage: its blocks and, for a reliable
+    * checkpoint, its `rdd-<id>` directory under the checkpoint dir (Spark
+    * deletes those only on driver GC, and only with
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`). A local
+    * checkpoint has no file, so this is the plain unpersist.
+    */
+  private[engine] def release(rdd: RDD[_]): Unit = {
+    rdd.unpersist(blocking = false)
+    rdd.getCheckpointFile.foreach { f =>
+      val p = new Path(f)
+      p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
 
   /** The checkpoint's backing RDD — the handle unpersist needs.
     * `Dataset.checkpoint`/`localCheckpoint` return a Dataset whose

@@ -1,9 +1,10 @@
 package graft.engine
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 
-/** Session-level tuning shared by the runner mains (Bench/Verify/PlanAudit/
-  * Profile/Explain). Everything here is parameterized by env with defaults
+/** Session-level tuning applied by [[GraftSession]] to every runner main
+  * and the test suite. Everything here is parameterized by env with defaults
   * justified in OPTIMIZATION_r14.md — nothing is tuned to the local core
   * count.
   */
@@ -12,7 +13,7 @@ object SessionTuning {
   /** Spark 4.1's FileSystem-based checkpoint manager (the one Spark itself
     * selects when FileContext is unavailable, e.g. s3a).
     */
-  private val FsCkptManager =
+  private[graft] val FsCkptManager =
     "org.apache.spark.sql.execution.streaming.checkpointing." +
       "FileSystemBasedCheckpointFileManager"
 
@@ -52,7 +53,7 @@ object SessionTuning {
   def apply(b: SparkSession.Builder): SparkSession.Builder = {
     val explicit = sys.env.get("SPARK_GRAFT_CKPT_FM")
     val fm = explicit.getOrElse {
-      if (defaultFsIsLocal) FsCkptManager else "default"
+      if (defaultFsIsLocal(new Configuration())) FsCkptManager else "default"
     }
     if (fm.isEmpty || fm == "default") b
     else
@@ -62,14 +63,15 @@ object SessionTuning {
       } catch { case _: ClassNotFoundException => b }
   }
 
-  /** Scheme of the environment's Hadoop default filesystem — `file` means
-    * checkpoints resolve to RawLocalFileSystem, where the FileContext
-    * manager's per-mkdir chmod fork/exec is the measured bottleneck.
+  /** Whether `conf`'s Hadoop default filesystem is local (scheme `file`):
+    * where unqualified checkpoint paths resolve. Here it means
+    * RawLocalFileSystem, where the FileContext manager's per-mkdir chmod
+    * fork/exec is the measured bottleneck; [[Ckpt]] uses it to refuse a
+    * node-local tmpdir for reliable checkpoints on a cluster filesystem.
     */
-  private def defaultFsIsLocal: Boolean =
+  private[engine] def defaultFsIsLocal(conf: Configuration): Boolean =
     try {
-      val scheme = org.apache.hadoop.fs.FileSystem
-        .getDefaultUri(new org.apache.hadoop.conf.Configuration()).getScheme
+      val scheme = org.apache.hadoop.fs.FileSystem.getDefaultUri(conf).getScheme
       scheme == null || scheme == "file"
     } catch { case _: Throwable => false }
 }

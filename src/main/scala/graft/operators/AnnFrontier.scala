@@ -119,14 +119,7 @@ object AnnFrontier {
 
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession()
     sweep(spark, dir).foreach(r =>
       println(f"${r.family}%-14s ${r.params}%-34s recall@10=${r.recall}%.2f " +
         f"${r.seconds}%.2fs${if (r.targeted) "  [targeted]" else ""}"))

@@ -25,15 +25,45 @@ class CkptSpec extends SparkSpec {
     sys.props("graft.ckpt") = "reliable"
     try {
       assert(Ckpt.reliable, "system-property override must engage")
+      val before = rddDirs()
       val reliable = Graph.pageRank(edges, "src", "dst", iters = 3)
         .as[(Long, Double)].collect().toMap
       assert(reliable == local,
         s"reliable checkpoint changed pageRank: $reliable vs $local")
+      val written = rddDirs() -- before
+      assert(written.nonEmpty, "reliable barriers must write checkpoint files")
+      CacheScope.drain()
+      assert(written.forall(!_.exists()),
+        s"drain must delete the barriers' checkpoint directories: ${written.filter(_.exists())}")
     } finally {
       sys.props.remove("graft.ckpt")
       CacheScope.drain()
     }
     assert(!Ckpt.reliable)
+  }
+
+  /** The `rdd-<id>` directories under the session's checkpoint dir. */
+  private def rddDirs(): Set[java.io.File] =
+    spark.sparkContext.getCheckpointDir.toSeq
+      .flatMap(d => Option(new java.io.File(new java.net.URI(d)).listFiles()).toSeq.flatten)
+      .filter(_.getName.startsWith("rdd-")).toSet
+
+  test("reliable mode refuses the tmpdir fallback on a non-local default filesystem") {
+    assume(sys.env.get("SPARK_GRAFT_CKPT_DIR").isEmpty,
+      "the fallback only applies without SPARK_GRAFT_CKPT_DIR")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = Option(conf.get("fs.defaultFS"))
+    sys.props("graft.ckpt") = "reliable"
+    // a scheme with no FileSystem behind it: nothing may be contacted
+    conf.set("fs.defaultFS", "graftcluster://namenode/")
+    try {
+      val e = intercept[IllegalStateException](Ckpt(edges))
+      assert(e.getMessage.contains("SPARK_GRAFT_CKPT_DIR"), e.getMessage)
+    } finally {
+      saved.fold(conf.unset("fs.defaultFS"))(conf.set("fs.defaultFS", _))
+      sys.props.remove("graft.ckpt")
+      CacheScope.drain()
+    }
   }
 
   test("barriers register their RDDs and drain releases them") {

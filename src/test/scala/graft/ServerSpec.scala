@@ -147,8 +147,21 @@ class ServerSpec extends SparkSpec {
     // malformed id part on a typed key column: clean 404 via try_cast,
     // not an ANSI cast 500
     assert(get("/cube/lineitem/fact/abc,1")._1 == 404)
-    // a bad order key errors without wedging the server
-    assert(get("/cube/lineitem/aggregate?drilldown=l_returnflag&order=bogus:desc")._1 == 500)
+    // a bad order key is a client error: 400 with a stable body (no
+    // analyzed plan, no run-specific expression ids like `l_returnflag#450`),
+    // and the server keeps serving
+    Seq(
+      "/cube/lineitem/aggregate?drilldown=l_returnflag&order=bogus:desc",
+      "/cube/lineitem/aggregate?drilldown=l_returnflag&order=bogus&format=csv",
+      "/cube/lineitem/aggregate?drilldown=l_returnflag&order=bogus&share=n_items",
+      "/cube/lineitem/facts?order=bogus&page=0&pagesize=5"
+    ).foreach { url =>
+      val (code, body) = get(url)
+      assert(code == 400, s"$url: $body")
+      assert(get(url) == ((400, body)), url)
+      assert(body.contains("bogus") && "#\\d".r.findFirstIn(body).isEmpty,
+        s"$url: $body")
+    }
     assert(get("/cube/lineitem/aggregate?drilldown=l_returnflag")._1 == 200)
   }
 

@@ -11,19 +11,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // local[threads, maxFailures]: task retries on, so failure-injection
-      // specs (ChaosSpec) can exercise recovery paths; a genuinely broken
-      // task still fails the job after 4 attempts
-      .master("local[4,4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // local[threads, maxFailures]: task retries on, so failure-injection specs
+  // (ChaosSpec) can exercise recovery paths; a genuinely broken task still
+  // fails the job after 4 attempts
+  lazy val session: SparkSession =
+    graft.engine.GraftSession("local[4,4]", partitions = 4, logLevel = "ERROR")
 }

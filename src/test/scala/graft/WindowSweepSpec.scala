@@ -18,6 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.operators.Ranks]] instead (the scale-safe device for
   * rows-scale frames), or (b) adds the site here AND classifies its frame
   * bound in [[PlanAudit.WindowAuditAppendix]].
+  *
+  * The same source scan guards the one session factory: no code in
+  * `src/main` or `src/test` but [[graft.engine.GraftSession]] builds a
+  * SparkSession, so the runners and the tests share one configuration.
   */
 class WindowSweepSpec extends AnyFunSuite {
 
@@ -69,15 +73,17 @@ class WindowSweepSpec extends AnyFunSuite {
     * source so string-stripping doesn't hide it) or, outside the query
     * registries, the nearest preceding `def`/`val` member name.
     */
+  private def scalaFiles(root: java.nio.file.Path): List[java.nio.file.Path] = {
+    val s = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    } finally s.close()
+  }
+
   private def sweep(): Map[String, Int] = {
     val root = java.nio.file.Paths.get("src/main/scala")
-    val files = {
-      val s = java.nio.file.Files.walk(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      } finally s.close()
-    }
+    val files = scalaFiles(root)
     val sitePat = java.util.regex.Pattern.compile("\\bWindow\\s*\\.\\s*orderBy")
     val keyPat = java.util.regex.Pattern.compile(
       "\"([a-z][0-9a-z_]*)\"\\s*->\\s*\\(\\(")
@@ -135,6 +141,25 @@ class WindowSweepSpec extends AnyFunSuite {
          |ntileOfRank) or add the site to WindowSweepSpec.Audited AND
          |classify its frame bound in PlanAudit.WindowAuditAppendix.
          |""".stripMargin)
+  }
+
+  test("GraftSession holds the only session builder; the test session carries its settings") {
+    // same comment/string stripping as the window sweep: only CODE counts
+    val builder = java.util.regex.Pattern.compile("\\bSparkSession\\s*\\.\\s*builder\\b")
+    val sites = for {
+      f <- scalaFiles(java.nio.file.Paths.get("src/main/scala")) ++
+        scalaFiles(java.nio.file.Paths.get("src/test/scala"))
+      m = builder.matcher(stripCommentsAndStrings(java.nio.file.Files.readString(f)))
+      _ <- Iterator.continually(m.find()).takeWhile(identity).toList
+    } yield f.getFileName.toString
+    assert(sites == List("GraftSession.scala"),
+      s"session builders in $sites: build sessions with graft.engine.GraftSession")
+    val conf = SparkSpec.session.conf
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    // the streaming checkpoint manager SessionTuning picks on a local FS
+    assert(conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
+      .contains(graft.engine.SessionTuning.FsCkptManager))
   }
 
   /** The audited list: file!enclosing-label -> number of unpartitioned
