@@ -134,12 +134,12 @@ object SparkEntry {
     // A16: members — distinct dimension values (cubes /members endpoint)
     "a16_members" -> ((s, dir) =>
       TestCubes.lineitem(s, dir).members("l_shipyear")),
-    // A17: percentage-of-total via broadcast with the summary row
+    // A17: percentage-of-total over the served rolled frame
     "a17_share_of_total" -> ((s, dir) =>
       rounded(TestCubes.lineitem(s, dir).aggregateWithShare(
         CubeQuery(drilldown = Seq("l_returnflag")),
         "price_sum", "price_pct"), (aggRound :+ ("price_pct" -> 4)): _*)),
-    // A18: summary + cells in one ROLLUP pass (response shape HOWTO.md:51-67)
+    // A18: summary + cells from the served rollup plan (response shape HOWTO.md:51-67)
     "a18_summary_cells" -> ((s, dir) =>
       rounded(TestCubes.lineitem(s, dir).aggregateWithSummary(
         CubeQuery(drilldown = Seq("l_returnflag"))), aggRound: _*)),

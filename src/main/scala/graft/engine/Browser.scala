@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -100,19 +100,14 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     def mName = a.measure.getOrElse(throw new IllegalArgumentException(
       s"aggregate '${a.name}' (${a.function}) needs a measure"))
     def m = col(mName)
-    // declared fixed-point scale → EXACT decimal accumulation (see
-    // model.Measure.decimalScale): the sums are deterministic under any
-    // partitioning/summation order, so downstream rounding can never flip
-    def scaleOf: Option[Int] =
-      model.measures.find(_.name == mName).flatMap(_.decimalScale)
-    def dec(s: Int) = m.cast(org.apache.spark.sql.types.DecimalType(18, s))
+    def dec(s: Int) = m.cast(DecimalType(18, s))
     def exactSum(s: Int) = sum(dec(s)).cast("double")
     val e = a.function match {
-      case "sum" => scaleOf.map(exactSum).getOrElse(sum(m))
+      case "sum" => scaleOf(mName).map(exactSum).getOrElse(sum(m))
       case "count"          => count(lit(1))
       case "avg" =>
-        scaleOf.map(s => exactSum(s) / count(m)).getOrElse(avg(m))
-      case "stddev" => scaleOf.map { s =>
+        scaleOf(mName).map(s => exactSum(s) / count(m)).getOrElse(avg(m))
+      case "stddev" => scaleOf(mName).map { s =>
         // sqrt((n·Σx² − (Σx)²) / n(n−1)) over exact sums: the variance
         // arithmetic runs on engine-identical doubles; greatest(…, 0)
         // clamps the tiny negative a zero-variance group can cancel to
@@ -132,13 +127,30 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     e.as(a.name)
   }
 
-  def aggExprs(names: Seq[String] = Nil): Seq[Column] = {
+  /** [[aggExpr]] of `a` over zero rows: 0 for the counts, else null. */
+  private def zeroRowValue(a: Aggregate): Any = a.function match {
+    case "count" | "count_distinct" | "approx_count_distinct" => 0L
+    case _ => null
+  }
+
+  def aggExprs(names: Seq[String] = Nil): Seq[Column] =
+    aggregatesFor(names).map(aggExpr)
+
+  /** The named aggregates, or every model aggregate for `Nil`. */
+  private def aggregatesFor(names: Seq[String]): Seq[Aggregate] = {
     val aggs = if (names.isEmpty) model.aggregates
     else names.map(n => model.aggregate(n).getOrElse(
       throw new IllegalArgumentException(s"unknown aggregate '$n'")))
     require(aggs.nonEmpty, s"cube '${model.name}' declares no aggregates")
-    aggs.map(aggExpr)
+    aggs
   }
+
+  /** Declared fixed-point scale → EXACT decimal accumulation (see
+    * model.Measure.decimalScale): sums deterministic under any summation
+    * order, so downstream rounding can never flip.
+    */
+  private def scaleOf(measure: String): Option[Int] =
+    model.measures.find(_.name == measure).flatMap(_.decimalScale)
 
   // ---- ordering / pagination -------------------------------------------
 
@@ -174,6 +186,10 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
   private def cellOrder(cells: DataFrame, q: CubeQuery): Seq[Column] =
     orderCols(cells, q.orders) ++
       q.drilldown.filterNot(d => q.orders.exists(_.key == d)).map(col(_).asc)
+
+  private def requireKeysetDrilldown(q: CubeQuery): Unit =
+    require(q.after.isEmpty || q.drilldown.nonEmpty,
+      "keyset pagination (after=) needs a drilldown (the token is a drilldown-key tuple)")
 
   /** Whether `after=` continues an aggregate-ordered cell page (token
     * `<aggValue>,<drilldown-key tuple>`); validates that shape.
@@ -217,8 +233,7 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     * double-aggregate tokens are compared as the client received them.
     */
   def aggregate(q: CubeQuery, aggNames: Seq[String] = Nil): DataFrame = {
-    require(q.after.isEmpty || q.drilldown.nonEmpty,
-      "keyset pagination (after=) needs a drilldown (the token is a drilldown-key tuple)")
+    requireKeysetDrilldown(q)
     val afterAgg = aggOrdered(q)
     val cutBase = applyCuts(q.cuts)
     val dimNames = q.drilldown.map(model.requireDimension(_).name)
@@ -246,28 +261,33 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     applyCuts(q.cuts).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Summary + cells in one pass via ROLLUP on the drilldown dims: the
-    * grand-total row (all dims null, grouping level = #dims) is the summary,
-    * level-0 rows are the cells. One shuffle instead of two jobs.
+  /** Summary + cells in one pass (A18, response shape HOWTO.md:51-67):
+    * the [[rollupLevels]] rows, grand-total row (all dims null, grouping
+    * level = 2^#dims − 1) after the cells (level 0). Lazy.
     */
   def aggregateWithSummary(q: CubeQuery, aggNames: Seq[String] = Nil): DataFrame = {
     require(q.drilldown.nonEmpty, "aggregateWithSummary needs a drilldown")
-    val base = applyCuts(q.cuts)
-    val dims = q.drilldown.map(d => col(model.requireDimension(d).name))
-    // plain single-level ROLLUP on purpose: this surface is LAZY, and the
-    // declarative shape lets Catalyst prune aggregate expressions a
-    // consumer doesn't read (a count() collapses it to the grouping
-    // skeleton). The eager always-fully-materialized path ([[rolledFrame]])
-    // uses [[mergeableRolled]] instead, where the two-level plan's cheaper
-    // full materialization always wins.
-    val aggs = aggExprs(aggNames) :+
-      grouping_id(dims: _*).cast(LongType).as("grouping_level")
-    val rolled = base.rollup(dims: _*).agg(aggs.head, aggs.tail: _*)
-      // ROLLUP emits intermediate levels too; keep cells (0) + grand total
-      .filter(col("grouping_level") === 0 ||
-              col("grouping_level") === ((1L << dims.size) - 1))
-    paginate(rolled,
+    paginate(rollupLevels(q, aggNames),
       col("grouping_level").asc +: q.drilldown.map(col(_).asc), q.page)
+  }
+
+  /** The cells (grouping level 0) and the grand-total row (level
+    * 2^#dims − 1, every dim null) of a drilldown, as one lazy plan:
+    * [[mergeableRolled]] when every aggregate merges exactly, else a
+    * plain ROLLUP whose intermediate levels are filtered out. Like ROLLUP,
+    * it has no grand row when the cut matches no rows. The one rollup
+    * plan behind [[rolledFrame]] and [[aggregateWithSummary]].
+    */
+  private def rollupLevels(q: CubeQuery, aggNames: Seq[String]): DataFrame = {
+    val dimNames = q.drilldown.map(model.requireDimension(_).name)
+    val base = applyCuts(q.cuts)
+    mergeableRolled(base, dimNames, aggNames).getOrElse {
+      val dims = dimNames.map(col)
+      val aggs = aggExprs(aggNames) :+
+        grouping_id(dims: _*).cast(LongType).as("grouping_level")
+      base.rollup(dims: _*).agg(aggs.head, aggs.tail: _*)
+    }.filter(col("grouping_level") === 0 ||
+      col("grouping_level") === ((1L << dimNames.size) - 1))
   }
 
   import Browser.{AggregateResponse, RolledFrame}
@@ -279,19 +299,18 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     * (three independent jobs recompute the scan per part and can see the
     * cube change between them).
     *
-    * The plan keeps only the cells and the grand level, via
-    * [[mergeableRolled]] when every aggregate merges exactly, else a plain
-    * ROLLUP. Its result is CELLS-SIZED (the aggregation already
-    * happened), so one `limit(collectCap + 2).collect()` yields all three
-    * parts and the summary and cells come back as LocalRelations: one
-    * scan, one aggregation, no persist. Persisting instead paid the
-    * InMemoryRelation columnar cache build — measured at 3.6× the
-    * cost of the aggregation itself (4.3 s vs 1.1 s at sf0.1) — plus a
-    * count job and a summary job before the page. A joined-in broadcast
-    * of the grand row looks equivalent but is NOT: the rolled subtree
-    * would appear twice in one plan, `DeduplicateRelations` re-aliases
-    * the second occurrence, and cache substitution misses it (observed:
-    * 5-10× the expected a17 cost at sf0.1).
+    * The plan, [[rollupLevels]], is CELLS-SIZED, so one
+    * `limit(collectCap + 2).collect()` yields all three parts as
+    * LocalRelations: one scan, one aggregation, no persist (persisting
+    * paid the InMemoryRelation cache build, 3.6× the aggregation at
+    * sf0.1). A joined-in broadcast of the grand row is NOT equivalent: the
+    * rolled subtree would appear twice in one plan, `DeduplicateRelations`
+    * re-aliases the second, and cache substitution misses it (5-10× the
+    * a17 cost at sf0.1).
+    *
+    * The summary always holds one row: [[summary]]'s, the zero-row values
+    * when the cut matches nothing. With no drilldown it is the only level
+    * and the cells are empty.
     *
     * Scale gate: a drilldown with more than `collectCap` cells must not
     * land on the driver; past the cap the frame is persisted and tracked
@@ -302,28 +321,33 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     */
   def rolledFrame(q: CubeQuery, aggNames: Seq[String] = Nil,
       collectCap: Int = Browser.ShareCollectCap): RolledFrame = {
-    require(q.drilldown.nonEmpty, "rolledFrame needs a drilldown")
     val dimNames = q.drilldown.map(model.requireDimension(_).name)
+    def local(rows: Seq[Row], schema: StructType) =
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    if (dimNames.isEmpty) {
+      // built directly: with zero dims the grand level 2^0 − 1 IS the
+      // cell level 0, and an ungrouped aggregate always yields its row
+      val s = summary(q, aggNames)
+      return RolledFrame(local(s.collect().toSeq, s.schema), local(Nil, s.schema),
+        Nil, 0L, () => ())
+    }
     val grand = (1L << dimNames.size) - 1
-    val base = applyCuts(q.cuts)
-    val rolled = mergeableRolled(base, dimNames, aggNames).getOrElse {
-      val dims = dimNames.map(col)
-      val aggs = aggExprs(aggNames) :+
-        grouping_id(dims: _*).cast(LongType).as("grouping_level")
-      base.rollup(dims: _*).agg(aggs.head, aggs.tail: _*)
-    }.filter(col("grouping_level") === 0 || col("grouping_level") === grand)
+    val rolled = rollupLevels(q, aggNames)
     def summaryOf(levels: DataFrame) = levels.filter(col("grouping_level") === grand)
       .drop("grouping_level").drop(dimNames: _*)
     def cellsOf(levels: DataFrame) = levels.filter(col("grouping_level") === 0)
       .drop("grouping_level")
     val probe = rolled.limit(collectCap + 2).collect()
     if (probe.length <= collectCap + 1) {
-      // ROLLUP over zero matching rows emits no grand row (and no cells):
-      // the summary frame is then empty, with its schema intact
-      val local = df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(probe: _*), rolled.schema)
+      val levels = local(probe.toSeq, rolled.schema)
       val gl = rolled.schema.fieldIndex("grouping_level")
-      RolledFrame(summaryOf(local), cellsOf(local), dimNames,
+      // no grand row: the cut matched no rows, and the summary is the
+      // ungrouped aggregate over zero rows, known without a Spark job
+      val summary =
+        if (probe.exists(_.getLong(gl) == grand)) summaryOf(levels)
+        else local(Seq(Row.fromSeq(aggregatesFor(aggNames).map(zeroRowValue))),
+          summaryOf(levels).schema)
+      RolledFrame(summary, cellsOf(levels), dimNames,
         probe.count(_.getLong(gl) == 0L), () => ())
     } else {
       val kept = CacheScope.persistTracked(rolled)
@@ -333,10 +357,22 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     }
   }
 
+  /** `rf` with each cell's share of the summary total of `aggName`, in
+    * percent, as the `pctName` column (A17; see [[aggregateWithShare]]).
+    * Added to the unpaged cells, so `order=<pctName>` pages by it.
+    */
+  def withShare(rf: RolledFrame, aggName: String, pctName: String): RolledFrame = {
+    val total = rf.summary.select(col(aggName)).collect().head.get(0)
+    rf.copy(cells = rf.cells.withColumn(pctName,
+      (col(aggName) / lit(total) * lit(100.0)).cast("double")))
+  }
+
   /** One page over a [[RolledFrame]] — all per-request work (order,
-    * offset/keyset pagination); never re-aggregates.
+    * offset/keyset pagination); never re-aggregates. Checks `order=` and
+    * `after=` without a drilldown too.
     */
   def pageOf(rf: RolledFrame, q: CubeQuery): AggregateResponse = {
+    requireKeysetDrilldown(q)
     // `after=` keyset page over the CELLS (summary + total stay global):
     // the token filters the cells-sized frame — depth-independent, no
     // top-(offset+limit). With order=<aggregate> the token is (order
@@ -430,14 +466,10 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     */
   private def mergeableRolled(base: DataFrame, dimNames: Seq[String],
       aggNames: Seq[String] = Nil): Option[DataFrame] = {
-    val aggs = if (aggNames.isEmpty) model.aggregates
-    else aggNames.map(n => model.aggregate(n).getOrElse(
-      throw new IllegalArgumentException(s"unknown aggregate '$n'")))
-    def scaleOf(a: Aggregate): Option[Int] = a.measure.flatMap(mn =>
-      model.measures.find(_.name == mn).flatMap(_.decimalScale))
+    val aggs = aggregatesFor(aggNames)
     val mergeable = aggs.forall { a => a.function match {
       case "count" | "min" | "max" => true
-      case "sum" | "avg" | "stddev" => scaleOf(a).isDefined
+      case "sum" | "avg" | "stddev" => a.measure.flatMap(scaleOf).isDefined
       case "count_distinct" => a.measure.isDefined
       case _ => false
     }}
@@ -456,7 +488,7 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     val finals = Seq.newBuilder[Column]
     aggs.foreach { a =>
       def m = col(a.measure.get)
-      def dec = m.cast(DecimalType(18, scaleOf(a).get))
+      def dec = m.cast(DecimalType(18, scaleOf(a.measure.get).get))
       def s1 = partial("s1", a.measure.get, sum(dec))
       def nm = partial("n", a.measure.get, count(m))
       a.function match {
@@ -489,7 +521,7 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
       else base.select(preKeys: _*).distinct()
     val dims = dimNames.map(col)
     val fCols = finals.result()
-    // rolledFrame keeps ONLY the cells and the grand row, so a ROLLUP
+    // rollupLevels keeps ONLY the cells and the grand row, so a ROLLUP
     // computes n−1 levels that are thrown away AND pays Spark's Expand
     // twice over the rows-scale pre frame (×2 for the levels, ×2 again
     // to split the distinct aggregate from the mergeable ones — r13
@@ -509,9 +541,10 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     val grandRow = pre.groupBy()
       .agg((fCols :+ count(lit(1)).as("__pre_rows")).head,
         (fCols :+ count(lit(1)).as("__pre_rows")).tail: _*)
-      // a global aggregate over EMPTY input still emits one (null-sum)
-      // row; ROLLUP does not — keep the established no-rows-no-summary
-      // contract (the server renders zero-count summaries from absence)
+      // a global aggregate over EMPTY input still emits one row, and its
+      // merged counts read null, not 0; ROLLUP emits no grand row there,
+      // so neither does this (rolledFrame substitutes the zero-row
+      // summary, and a18 keeps ROLLUP's rows)
       .filter(col("__pre_rows") > 0)
       .select(nullDims ++ aggs.map(a => col(a.name)) :+
         lit(grand).as("grouping_level"): _*)
@@ -522,18 +555,13 @@ final class Browser(val model: CubeModel, val df: DataFrame) {
     * cell's aggregate divided by the summary total. Both come from the
     * same [[rolledFrame]], so the cube is scanned and aggregated once and
     * the result stays correct for non-decomposable aggregates
-    * (count_distinct, stddev) where re-summing cells would be wrong. The
-    * share column is added before the page's sort, so `order=<pctName>`
-    * works. Eager, like [[rolledFrame]].
+    * (count_distinct, stddev) where re-summing cells would be wrong:
+    * [[rolledFrame]] → [[withShare]] → [[pageOf]], the composition the
+    * server's `share=` serves. Eager, like [[rolledFrame]].
     */
   def aggregateWithShare(q: CubeQuery, aggName: String, pctName: String,
-      collectCap: Int = Browser.ShareCollectCap): DataFrame = {
-    val rf = rolledFrame(q, collectCap = collectCap)
-    val total = rf.summary.select(col(aggName)).collect().headOption.map(_.get(0)).orNull
-    val shared = rf.cells.withColumn(pctName,
-      (col(aggName) / lit(total) * lit(100.0)).cast("double"))
-    pageOf(rf.copy(cells = shared), q).cells
-  }
+      collectCap: Int = Browser.ShareCollectCap): DataFrame =
+    pageOf(withShare(rolledFrame(q, collectCap = collectCap), aggName, pctName), q).cells
 
   /** Split a fact id / continuation token into key parts (single-column
     * keys take the raw string — DOIs may contain commas).

@@ -40,13 +40,6 @@ object CacheStore {
     currentGen(root).map(g => spark.read.parquet(root.resolve(g).toString))
   }
 
-  /** Read the current generation, or `fallback` when the cache is empty —
-    * the "load from file if present, else start empty" startup rule
-    * (springer_compact_coverage.py:137-154).
-    */
-  def readOr(spark: SparkSession, dir: String)(fallback: => DataFrame): DataFrame =
-    read(spark, dir).getOrElse(fallback)
-
   /** The update-wins merge at the heart of [[upsert]] — the reference's
     * `CACHE[id] = value` dict semantics (:131-132, :205) as a dataflow:
     * an update row replaces the existing row with its key, existing rows

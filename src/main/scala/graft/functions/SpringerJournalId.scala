@@ -44,9 +44,4 @@ object SpringerJournalId {
       .when(doi.startsWith("10.1631"), lit("11582"))  // J Zhejiang Univ-SCIENCE A
       .when(doi.startsWith("10.3938/jkps"), lit("40042")) // J Korean Phys Soc
       .otherwise(lit(null))
-
-  /** True where the DOI is recognisably Springer (any rule applies). */
-  def isSpringerDoi(doi: Column): Column =
-    startsWithAny(doi, regularPrefixes ++ cacheOnlyPrefixes ++
-      Seq("10.14283", "10.1631", "10.3938/jkps"))
 }

@@ -74,11 +74,9 @@ object TextFunctions {
     "fr" -> Seq("le", "la", "les", "et", "est", "un", "une", "dans", "pour", "que"),
     "es" -> Seq("el", "la", "los", "y", "es", "un", "una", "en", "por", "con"))
 
-  /** #tokens belonging to the given marker set. */
-  def markerCount(text: Column, words: Seq[String]): Column =
-    markerCountOf(tokens(text), words)
-
-  /** Every text-based function below also has an `…Of(ts)` form over a
+  /** #tokens belonging to the given marker set.
+    *
+    * This and the text-based functions below have an `…Of(ts)` form over a
     * MATERIALIZED tokens column: lambda HOFs are excluded from
     * subexpression elimination, so `langId(text)` tokenizes 4× and
     * `qualityScore(text)` ~6× per row. Queries that need several of these
@@ -92,9 +90,6 @@ object TextFunctions {
   /** Stopword ratio (English markers by default) — a standard quality
     * heuristic: natural prose has 0.2-0.5, keyword salad near 0.
     */
-  def stopwordRatio(text: Column, lang: String = "en"): Column =
-    stopwordRatioOf(tokens(text), lang)
-
   def stopwordRatioOf(ts: Column, lang: String = "en"): Column = {
     val n = size(ts)
     when(n > 0, markerCountOf(ts, stopwords(lang)).cast("double") / n)

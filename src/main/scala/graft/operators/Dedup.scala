@@ -343,11 +343,8 @@ object Dedup {
     * min over xxhash64(i, shingle) — seeding with the permutation index as
     * an extra hash input gives independent families; 64-bit longs make the
     * array_min and band hashing integer ops (no hex-string allocation).
-    */
-  def minhashSignature(text: Column, k: Int, numHashes: Int): Column =
-    minhashSignatureOf(TextFunctions.shingles(text, k), numHashes)
-
-  /** Signature over an ALREADY-MATERIALIZED shingle array column. Callers
+    *
+    * Over an ALREADY-MATERIALIZED shingle array column. Callers
     * scoring many hashes must materialize `sh` first (checkpoint/persist
     * boundary): Catalyst's CollapseProject inlines a shingle EXPRESSION
     * into every one of the `numHashes` elements, re-tokenizing and

@@ -30,7 +30,7 @@ object Packing {
     * inside that sequence. Input columns PASS THROUGH (so compositions —
     * chunks into sequences — never need a self-join back to their source,
     * which would reference the same subtree twice in one plan and trip the
-    * cache-substitution miss documented on Browser.aggregateWithShare).
+    * cache-substitution miss documented on Browser.rolledFrame).
     * Deterministic given (idCol order, shards, budget); all integer
     * arithmetic — results are engine-exact.
     *

@@ -43,9 +43,7 @@ final case class RangeCut(dim: String, lo: Option[String], hi: Option[String],
     s"${if (invert) "!" else ""}$dim:${lo.getOrElse("")}~${hi.getOrElse("")}"
 }
 
-final case class Order(key: String, desc: Boolean = false) {
-  def render: String = if (desc) s"$key:desc" else key
-}
+final case class Order(key: String, desc: Boolean = false)
 
 /** 0-based page. The reference caps pagesize at 500 (slicer.ini:6). */
 final case class Page(page: Int, pagesize: Int) {
@@ -65,8 +63,6 @@ final case class CubeQuery(
     // row already seen — O(page) deep pagination instead of O(offset+page)
     after: Option[String] = None) {
   def renderCut: String = cuts.map(_.render).mkString("|")
-  def renderDrilldown: String = drilldown.mkString("|")
-  def renderOrder: String = orders.map(_.render).mkString(",")
 }
 
 object QueryParser {

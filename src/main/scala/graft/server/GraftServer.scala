@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 import graft.engine.Browser
 import graft.query.{CubeQuery, QueryParser}
@@ -19,9 +21,10 @@ import graft.registry.CubeRegistry
   *                                                        (slicer.ini:11 info_file)
   *   GET /cubes                       → cube list         (HOWTO.md:31-33)
   *   GET /cube/<c>/model              → cube model        (HOWTO.md:69-71)
-  *   GET /cube/<c>/aggregate?cut&drilldown&order&page&pagesize&format=csv
+  *   GET /cube/<c>/aggregate?cut&drilldown&order&page&pagesize&after&format=csv
   *                                    → {summary, cells, total_cell_count}
-  *                                      (format=csv: the cells as CSV)
+  *                                      (format=csv: the cells as CSV, the
+  *                                      summary row without a drilldown)
   *                                                        (HOWTO.md:44-91)
   *   GET /cube/<c>/aggregate?drilldown&share=<agg>
   *                                    → {cells, cell_count} with
@@ -33,9 +36,13 @@ import graft.registry.CubeRegistry
   *                                      surface; SURVEY §1.3)
   *   GET /cube/<c>/members/<dim>      → distinct values   (HOWTO.md:5 → cubes docs)
   *
+  * Every aggregate body (JSON, CSV, `share=`) is one path: frame-cached
+  * [[Browser.rolledFrame]] → share column → [[Browser.pageOf]] → render;
+  * only the rendering looks at whether there is a drilldown.
+  *
   * The JDK's built-in HttpServer keeps the facade dependency-free; all data
-  * work stays in Spark (`Dataset.toJSON`), nothing is post-processed on the
-  * driver beyond string assembly. `recordLimit` mirrors the reference's
+  * work stays in Spark (`toJSON` / `to_json`), nothing is post-processed on
+  * the driver beyond string assembly. `recordLimit` mirrors the reference's
   * `json_record_limit: 500` (slicer.ini:6): pagesize is capped, and an
   * unpaginated facts listing is truncated to the limit.
   */
@@ -237,58 +244,56 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
       p.copy(pagesize = math.min(p.pagesize, recordLimit))))
   }
 
-  /** Summary + cells + total from one [[Browser.rolledFrame]] (one
-    * scan+aggregate per request, atomic snapshot) paged by
-    * [[Browser.pageOf]].
+  /** The page behind every `/aggregate` body: the frame-cached
+    * [[Browser.rolledFrame]] (an atomic snapshot of summary, cells and
+    * total), `<agg>_pct` cells for `share=<agg>`, paged.
+    */
+  private def aggregatePage(cube: String, params: Map[String, String])
+      : (CubeQuery, Option[String], Browser.AggregateResponse) = {
+    val b = registry.browser(cube)
+    val q = parseQuery(params)
+    val share = params.get("share").filter(_.nonEmpty)
+    share.foreach(requireShareable(b, q, _))
+    val rf = rolledFor(cube, b, q, params.get("nocache").contains("1"))
+    (q, share, b.pageOf(share.fold(rf)(a => b.withShare(rf, a, s"${a}_pct")), q))
+  }
+
+  /** `{summary, cells, total_cell_count}` (HOWTO.md:44-91); with no
+    * drilldown the summary IS the result (HOWTO.md:51-55), one cell.
     *
     * `share=<aggregate>` (extension; the treemap frontend's
     * `total_percentage` relates_to semantics, YAML_STATIC_PART_APC:23-27,
-    * served engine-side): each cell additionally carries
-    * `<aggregate>_pct`, its share of the grand total, from
-    * Browser.aggregateWithShare over the same rolled frame.
+    * served engine-side): `{cells, cell_count}`, each cell carrying
+    * `<aggregate>_pct`; cell_count counts the cells in THIS response (the
+    * page, when paginated), not the unpaged total.
     */
   private def aggregateJson(cube: String, params: Map[String, String]): String = {
-    val b = registry.browser(cube)
-    val q = parseQuery(params)
-    params.get("share").filter(_.nonEmpty) match {
-      case Some(aggName) =>
-        val cells = shareCells(b, q, aggName).toJSON.collect()
-        // cell_count = cells in THIS response (the page, when paginated) —
-        // not the unpaged total the plain aggregate response reports
-        return s"""{"cells":[${cells.mkString(",")}],""" +
-          s""""cell_count":${cells.length}}"""
-      case None => ()
-    }
-    if (q.drilldown.isEmpty) {
-      // no drilldown: the summary IS the result (HOWTO.md:51-55); one job
-      val summary = b.summary(q).toJSON.collect().headOption.getOrElse("{}")
-      s"""{"summary":$summary,"cells":[],"total_cell_count":1}"""
-    } else {
-      val r = b.pageOf(rolledFor(cube, b, q, params.get("nocache").contains("1")), q)
-      // ROLLUP over zero matching rows emits no grand-total row; fall
-      // back to the ungrouped aggregate (count=0 / null sums) for the
-      // summary shape the no-drilldown path produces
-      val summary = r.summary.toJSON.collect().headOption
-        .orElse(b.summary(q).toJSON.collect().headOption)
-        .getOrElse("{}")
-      val cells = r.cells.toJSON.collect()
-      s"""{"summary":$summary,"cells":[${cells.mkString(",")}],""" +
-        s""""total_cell_count":${r.totalCellCount}}"""
+    val (q, share, r) = aggregatePage(cube, params)
+    val cells = jsonRows(r.cells)
+    if (share.nonEmpty)
+      s"""{"cells":[${cells.mkString(",")}],"cell_count":${cells.length}}"""
+    else {
+      val total = if (q.drilldown.isEmpty) 1L else r.totalCellCount
+      s"""{"summary":${jsonRows(r.summary).head},"cells":[${cells.mkString(",")}],""" +
+        s""""total_cell_count":$total}"""
     }
   }
 
-  /** The validated share-of-total cells frame — ONE definition of the
-    * share= guards and semantics for both the JSON and CSV renderings.
+  /** `Dataset.toJSON`'s objects (its Jackson generator, via `to_json`) as
+    * a projection, which Catalyst folds into an unsorted collected frame
+    * (the summary row): no Spark job.
     */
-  private def shareCells(b: Browser, q: CubeQuery,
-      aggName: String): org.apache.spark.sql.DataFrame = {
+  private def jsonRows(d: DataFrame): Array[String] =
+    d.select(to_json(struct(col("*")))).collect().map(_.getString(0))
+
+  /** The three `share=` guards, checked before any Spark work. */
+  private def requireShareable(b: Browser, q: CubeQuery, aggName: String): Unit = {
     if (q.drilldown.isEmpty) throw new IllegalArgumentException(
       "share= needs a drilldown (a grand total has no cells to share)")
     if (b.model.aggregate(aggName).isEmpty) throw new IllegalArgumentException(
       s"unknown aggregate '$aggName' for share=")
     if (q.after.nonEmpty) throw new IllegalArgumentException(
       "after= is not supported with share= (share cells page by offset)")
-    b.aggregateWithShare(q, aggName, s"${aggName}_pct")
   }
 
   /** `GET /cube/<c>/fact/<id>`: single fact by factKey (comma-separated
@@ -336,26 +341,12 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
     * driver-side string assembly stays small.
     */
   private def aggregateCsv(cube: String, params: Map[String, String]): String = {
-    val b = registry.browser(cube)
-    val q = parseQuery(params)
-    params.get("share").filter(_.nonEmpty) match {
-      case Some(aggName) =>
-        val cells = shareCells(b, q, aggName)
-        csvRender(cells.columns, cells.collect())
-      case None =>
-        if (q.drilldown.isEmpty) {
-          val s = b.summary(q)
-          csvRender(s.columns, s.collect())
-        } else {
-          val cells = b.pageOf(
-            rolledFor(cube, b, q, params.get("nocache").contains("1")), q).cells
-          csvRender(cells.columns, cells.collect())
-        }
-    }
+    val (q, _, r) = aggregatePage(cube, params)
+    val rows = if (q.drilldown.isEmpty) r.summary else r.cells
+    csvRender(rows.columns, rows.collect())
   }
 
-  private def csvRender(columns: Seq[String],
-      rows: Array[org.apache.spark.sql.Row]): String = {
+  private def csvRender(columns: Seq[String], rows: Array[Row]): String = {
     def cell(v: Any): String = v match {
       case null => ""
       case s =>

@@ -168,6 +168,27 @@ class BrowserSpec extends SparkSpec {
     assert(r.isNullAt(r.fieldIndex("sd")))
   }
 
+  test("rolledFrame of a nothing-matches cut: summary == summary(q), every aggregate function") {
+    // the rolled frame has no grand row there and writes the zero-row
+    // values itself; they must be the ungrouped aggregate's, per function
+    val fns = Seq("sum", "count", "avg", "stddev", "count_distinct",
+      "approx_count_distinct", "min", "max")
+    val measures = Seq("l_extendedprice", "l_quantity")
+    val m = li.model.copy(aggregates = for (f <- fns; (mn, i) <- measures.zipWithIndex)
+      yield Aggregate(s"${f}_$i", f, Some(mn)))
+    // approx_count_distinct does not merge: the plain-ROLLUP plan; `li`'s
+    // own aggregates take the two-level mergeable plan
+    for (b <- Seq(new Browser(m, li.df), li);
+         dd <- Seq(Nil, Seq("l_returnflag"), Seq("l_returnflag", "l_linestatus"))) {
+      val q = CubeQuery(cuts = Seq(PointCut("l_returnflag", "ZZZ")), drilldown = dd)
+      val rf = b.rolledFrame(q)
+      assert(rf.summary.collect().map(_.toSeq).toSeq ==
+        b.summary(q).collect().map(_.toSeq).toSeq, dd)
+      assert(rf.summary.schema.map(_.dataType) == b.summary(q).schema.map(_.dataType), dd)
+      assert(rf.cells.isEmpty && rf.totalCellCount == 0L, dd)
+    }
+  }
+
   test("share-of-total sums to 100% (A17)") {
     val cells = li.aggregateWithShare(
       CubeQuery(drilldown = Seq("l_returnflag")), "price_sum", "pct").collect()

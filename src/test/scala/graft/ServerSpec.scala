@@ -100,16 +100,34 @@ class ServerSpec extends SparkSpec {
     // the ROLLUP-served response must byte-match what summary() +
     // aggregate() + unpaged count would have produced independently —
     // through the frame cache and past it (nocache=1), for offset and
-    // keyset (after=) pages, for a nothing-matches cut, and as CSV
+    // keyset (after=) pages, for a nothing-matches cut, without a
+    // drilldown, with share= and as CSV
+    import org.apache.spark.sql.functions.{col, lit}
     val b = TestCubes.lineitem(spark, sf())
-    def parsed(params: String) = query.QueryParser.parse(params.split('&').map { kv =>
-      val Array(k, v) = kv.split("=", 2); k -> java.net.URLDecoder.decode(v, "UTF-8") }.toMap)
+    def paramMap(params: String) = params.split('&').filter(_.nonEmpty).map { kv =>
+      val Array(k, v) = kv.split("=", 2); k -> java.net.URLDecoder.decode(v, "UTF-8") }.toMap
+    def parsed(params: String) = query.QueryParser.parse(paramMap(params))
+    // the cells of `aggregate`, plus (agg / total) * 100 for share=<agg>
+    def cellsOf(params: String) = {
+      val q = parsed(params)
+      paramMap(params).get("share").fold(b.aggregate(q)) { agg =>
+        val total = b.summary(q).select(agg).collect().head.get(0)
+        b.aggregate(q).withColumn(s"${agg}_pct",
+          (col(agg) / lit(total) * lit(100.0)).cast("double"))
+      }
+    }
     def composed(params: String): String = {
       val q = parsed(params)
-      val summary = b.summary(q).toJSON.collect().head
-      val cells = b.aggregate(q).toJSON.collect().mkString(",")
-      val total = b.aggregate(q.copy(page = None, orders = Nil, after = None)).count()
-      s"""{"summary":$summary,"cells":[$cells],"total_cell_count":$total}"""
+      val cells = cellsOf(params).toJSON.collect()
+      if (paramMap(params).contains("share"))
+        s"""{"cells":[${cells.mkString(",")}],"cell_count":${cells.length}}"""
+      else {
+        val summary = b.summary(q).toJSON.collect().head
+        // no drilldown: the summary is the one result cell
+        val (shown, total) = if (q.drilldown.isEmpty) ("", 1L) else (cells.mkString(","),
+          b.aggregate(q.copy(page = None, orders = Nil, after = None)).count())
+        s"""{"summary":$summary,"cells":[$shown],"total_cell_count":$total}"""
+      }
     }
     Seq(
       "drilldown=l_returnflag&order=n_items:desc&page=0&pagesize=2",
@@ -117,7 +135,17 @@ class ServerSpec extends SparkSpec {
       "drilldown=l_suppkey&after=3&pagesize=4",
       "drilldown=l_suppkey&order=n_items:desc&after=999999999,-1&pagesize=4&nocache=1",
       "drilldown=l_returnflag&cut=l_returnflag:ZZZ",
-      "drilldown=l_returnflag&cut=l_returnflag:ZZZ&nocache=1"
+      "drilldown=l_returnflag&cut=l_returnflag:ZZZ&nocache=1",
+      "",
+      "nocache=1",
+      "cut=l_returnflag:R",
+      "cut=l_returnflag:ZZZ",
+      "cut=l_returnflag:ZZZ&nocache=1",
+      // drilldown=l_returnflag without a cut is frame-cached above
+      "drilldown=l_returnflag&share=price_sum",
+      "drilldown=l_suppkey&share=n_items&nocache=1",
+      "drilldown=l_suppkey&share=price_sum&order=price_sum:desc&page=1&pagesize=3",
+      "drilldown=l_returnflag&cut=l_returnflag:ZZZ&share=price_sum"
     ).foreach { params =>
       val (code, body) = get(s"/cube/lineitem/aggregate?$params")
       assert(code == 200, params)
@@ -125,15 +153,48 @@ class ServerSpec extends SparkSpec {
     }
     Seq(
       "drilldown=l_returnflag%7Cl_linestatus&order=price_sum:desc",
-      "drilldown=l_suppkey&after=3&pagesize=4&nocache=1"
+      "drilldown=l_suppkey&after=3&pagesize=4&nocache=1",
+      "nocache=1",
+      "cut=l_returnflag:R",
+      "cut=l_returnflag:ZZZ",
+      "drilldown=l_returnflag%7Cl_linestatus&share=qty_sum&order=qty_sum:desc",
+      "drilldown=l_returnflag&share=n_items&nocache=1"
     ).foreach { params =>
       val (code, body) = get(s"/cube/lineitem/aggregate?$params&format=csv")
       assert(code == 200, params)
-      val cells = b.aggregate(parsed(params))
+      // without a drilldown `aggregate` is the summary row: the CSV's row
+      val cells = cellsOf(params)
       val expected = (cells.columns.toSeq +: cells.collect().toSeq.map(_.toSeq.map(
         v => if (v == null) "" else v.toString))).map(_.mkString(",")).mkString("\r\n")
       assert(body == expected, params)
     }
+  }
+
+  test("share= pages the frame cache: fewer Spark jobs than its nocache=1 twin") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    // one request at a time: the jobs counted are the ones it launched
+    def jobsOf(path: String): Int = {
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      val before = jobs.get
+      val (code, body) = get(path)
+      assert(code == 200, s"$path: $body")
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      jobs.get - before
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val plain = "/cube/lineitem/aggregate?cut=l_linestatus:O&drilldown=l_shipyear"
+      assert(get(plain)._1 == 200) // builds and caches the (cut, drilldown) frame
+      val cached = jobsOf(s"$plain&share=qty_sum")
+      val computed = jobsOf(s"$plain&share=qty_sum&nocache=1")
+      assert(cached < computed,
+        s"share= over a cached frame ran $cached jobs, its nocache=1 twin $computed")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("GET fact/<id>: single fact by composite factKey; 404 when absent") {
@@ -154,12 +215,26 @@ class ServerSpec extends SparkSpec {
       "/cube/lineitem/aggregate?drilldown=l_returnflag&order=bogus:desc",
       "/cube/lineitem/aggregate?drilldown=l_returnflag&order=bogus&format=csv",
       "/cube/lineitem/aggregate?drilldown=l_returnflag&order=bogus&share=n_items",
-      "/cube/lineitem/facts?order=bogus&page=0&pagesize=5"
+      "/cube/lineitem/facts?order=bogus&page=0&pagesize=5",
+      // without a drilldown too: the order keys are checked, not ignored
+      "/cube/lineitem/aggregate?order=bogus",
+      "/cube/lineitem/aggregate?order=bogus:desc&format=csv"
     ).foreach { url =>
       val (code, body) = get(url)
       assert(code == 400, s"$url: $body")
       assert(get(url) == ((400, body)), url)
       assert(body.contains("bogus") && "#\\d".r.findFirstIn(body).isEmpty,
+        s"$url: $body")
+    }
+    // an after= token without a drilldown pages nothing: 400, stable body
+    Seq(
+      "/cube/lineitem/aggregate?after=3",
+      "/cube/lineitem/aggregate?order=n_items:desc&after=5,1&format=csv"
+    ).foreach { url =>
+      val (code, body) = get(url)
+      assert(code == 400, s"$url: $body")
+      assert(get(url) == ((400, body)), url)
+      assert(body.contains("after=") && "#\\d".r.findFirstIn(body).isEmpty,
         s"$url: $body")
     }
     assert(get("/cube/lineitem/aggregate?drilldown=l_returnflag")._1 == 200)
@@ -169,8 +244,9 @@ class ServerSpec extends SparkSpec {
     val (code, body) = get(
       "/cube/lineitem/aggregate?drilldown=l_returnflag&cut=l_returnflag:ZZZ")
     assert(code == 200)
-    // ROLLUP over zero rows emits no grand-total row; the server falls
-    // back to the ungrouped aggregate (count 0, null sums)
+    // ROLLUP over zero rows emits no grand-total row; the rolled frame's
+    // summary is then the ungrouped aggregate over zero rows (count 0,
+    // null sums)
     assert(body.contains("\"cells\":[]") && body.contains("\"total_cell_count\":0"))
     assert(body.contains("\"n_items\":0"))
   }

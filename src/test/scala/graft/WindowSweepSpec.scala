@@ -21,7 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The same source scan guards the one session factory: no code in
   * `src/main` or `src/test` but [[graft.engine.GraftSession]] builds a
-  * SparkSession, so the runners and the tests share one configuration.
+  * SparkSession, so the runners and the tests share one configuration —
+  * and the one served aggregate path: `GraftServer` builds no aggregate
+  * body but through `Browser.rolledFrame` → `Browser.pageOf`.
   */
 class WindowSweepSpec extends AnyFunSuite {
 
@@ -160,6 +162,18 @@ class WindowSweepSpec extends AnyFunSuite {
     // the streaming checkpoint manager SessionTuning picks on a local FS
     assert(conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
       .contains(graft.engine.SessionTuning.FsCkptManager))
+  }
+
+  test("GraftServer serves every aggregate through one path (rolledFrame → pageOf)") {
+    // a second served aggregate path — the plain summary or the one-shot
+    // share composition — would serve bodies the frame cache and the
+    // order/after checks of Browser.pageOf never see
+    val src = stripCommentsAndStrings(java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/server/GraftServer.scala")))
+    val calls = Seq("\\.\\s*summary\\s*\\(", "\\baggregateWithShare\\s*\\(")
+      .filter(p => java.util.regex.Pattern.compile(p).matcher(src).find())
+    assert(calls.isEmpty, s"GraftServer.scala calls $calls: page Browser.rolledFrame instead")
+    assert(src.contains("rolledFrame(") && src.contains("pageOf("))
   }
 
   /** The audited list: file!enclosing-label -> number of unpartitioned
