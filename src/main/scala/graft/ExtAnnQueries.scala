@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.table
+import graft.functions.GraftFunctions.dot
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Similarity}
 
@@ -21,8 +22,6 @@ private[graft] trait ExtAnnQueries { this: ExtQueriesBase =>
     // of the dequantized vector vs the original
     "x25_quantize" -> ((s, dir) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
-      def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        call_function("graft_dot", a, b)
       val v = embeddingsD(s, dir).select(col("vec_id"), col("vec"),
         Similarity.quantizeScale(col("vec")).as("scale"))
       val dq = v.select(col("vec_id"), col("vec"), col("scale"),
@@ -359,8 +358,6 @@ private[graft] trait ExtAnnQueries { this: ExtQueriesBase =>
     // restricts candidates first (x13's path), label filter unchanged.
     "x132_hard_negatives" -> ((s, dir) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
-      def dot(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-        call_function("graft_dot", x, y)
       val e = embeddingsD(s, dir)
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("vec").as("qv"),
@@ -831,8 +828,6 @@ private[graft] trait ExtAnnQueries { this: ExtQueriesBase =>
     // the 5 rounds.
     "x156_mmr_diversify" -> ((s, dir) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
-      def dot(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-        call_function("graft_dot", x, y)
       val e = embeddingsD(s, dir)
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("vec").as("qv"),
@@ -1621,8 +1616,8 @@ private[graft] trait ExtAnnQueries { this: ExtQueriesBase =>
       }
       Stage.write(model, dir, "x204_rotation")
       e.crossJoin(broadcast(model))
-        .withColumn("p", call_function("graft_dot",
-          zip_with(col("vec"), col("mu"), (a, b) => a - b), col("w")))
+        .withColumn("p",
+          dot(zip_with(col("vec"), col("mu"), (a, b) => a - b), col("w")))
         .withColumn("pm", floor(col("p") * lit(1e6) + lit(0.5)).cast("long"))
         .groupBy(col("comp"))
         .agg(count(lit(1)).as("n"), sum(col("pm")).as("sp"),
@@ -1654,8 +1649,6 @@ private[graft] trait ExtAnnQueries { this: ExtQueriesBase =>
       val corpus = graft.operators.Dedup.widen(
         e.filter(col("vec_id") % 50 =!= 0))
         .select(col("vec_id"), col("vec"))
-      val dot = (x: org.apache.spark.sql.Column,
-          y: org.apache.spark.sql.Column) => call_function("graft_dot", x, y)
       corpus.crossJoin(broadcast(bench))
         .withColumn("cosq",
           floor(dot(col("vec"), col("bvec")) /
@@ -1845,8 +1838,6 @@ private[graft] trait ExtAnnQueries { this: ExtQueriesBase =>
     // the SHARED kernel string before the order-free sum.
     "x261_mmd_drift" -> ((s, dir) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
-      def dot(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-        call_function("graft_dot", x, y)
       val e = embeddingsD(s, dir)
       def ranked(par: Int) = graft.operators.Ranks.globalRowNumber(
         e.filter(col("vec_id") % 2 === par)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.table
+import graft.functions.GraftFunctions.dot
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Similarity}
 
@@ -321,7 +322,7 @@ private[graft] trait ExtDedupQueries { this: ExtQueriesBase =>
         // product would re-evaluate per dimension (64 x 64 multiplies per
         // doc instead of 64 — measured as the query's hot spot)
         .select(col("doc_id"), col("cs"),
-          sqrt(call_function("graft_dot", col("cs"), col("cs"))).as("nrm"))
+          sqrt(dot(col("cs"), col("cs"))).as("nrm"))
         .select(col("doc_id"),
           transform(col("cs"), x => graft.functions.EngineMath.roundAway(
             x / col("nrm"), 6)).as("vec"))

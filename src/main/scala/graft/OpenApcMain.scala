@@ -126,8 +126,9 @@ object OpenApcMain {
     else df
   }
 
-  /** Register the static cubes from their written parquet plus one filter
-    * view per institutional-manifest row.
+  /** Publish the static cubes from their written parquet plus one filter
+    * view per institutional-manifest row as the registry's whole cube set,
+    * in one swap ([[CubeRegistry.replaceAll]]).
     *
     * `cache = true` (the default, SURVEY §4's caching row) marks every
     * static cube's frame for Spark caching: the data is rebuild-only, so
@@ -147,27 +148,25 @@ object OpenApcMain {
     val static = OpenApcModels.staticModels.map { m =>
       m.name -> readCube(spark, s"$cubesDir/${m.name}.parquet")
     }.toMap
-    OpenApcModels.staticModels.foreach(m =>
-      registry.register(m, static(m.name), cache = cache))
-    manifest.foreach { e =>
-      val parent = static(OpenApcModels.parentCube(e.cubeType))
-      registry.register(
-        OpenApcModels.institutionalModel(e.cubeType, e.cubeName, e.fullName),
-        parent.filter(col("institution") === lit(e.institution)))
-    }
+    registry.replaceAll(
+      OpenApcModels.staticModels.map(m => (m, static(m.name), cache)) ++
+        manifest.map { e =>
+          val parent = static(OpenApcModels.parentCube(e.cubeType))
+          (OpenApcModels.institutionalModel(e.cubeType, e.cubeName, e.fullName),
+            parent.filter(col("institution") === lit(e.institution)), false)
+        })
   }
 
   /** Rebuild-redeploy reload (update_olap.sh:12-16 parity without a server
-    * restart): drop + unpersist every registration, invalidate Spark's
-    * cached file listings/plans for the rewritten parquet, and re-register
-    * fresh reads. Requests racing the swap see either the old or the new
-    * registry entry — never a half-state — because the registry swap is
-    * per-cube atomic (TrieMap put) and the old cached data stays valid
-    * until its unpersist.
+    * restart): invalidate Spark's cached file listings/plans for the
+    * rewritten parquet, then publish fresh reads of every cube. A request
+    * never sees a half-state: the new cube set is built off to the side
+    * and published with one registry swap (one generation bump), and each
+    * request reads one registry snapshot, so it is served wholly from the
+    * old set or wholly from the new one, and no cube is ever missing.
     */
   def reload(spark: SparkSession, registry: CubeRegistry, cubesDir: String,
       manifest: Seq[graft.etl.ManifestEntry], cache: Boolean = true): Unit = {
-    registry.unregisterAll()
     spark.catalog.refreshByPath(cubesDir)
     registerAll(spark, registry, cubesDir, manifest, cache)
   }

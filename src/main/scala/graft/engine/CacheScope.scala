@@ -75,26 +75,6 @@ object CacheScope {
     }
   }
 
-  /** Process-end escape hatch: unpersist EVERYTHING regardless of which
-    * thread registered it. Per-thread [[drain]] means a frame registered
-    * on a thread that never drains (a worker-pool future, a test framework
-    * dispatching on a different thread) would otherwise stay persisted for
-    * the session's lifetime. Only safe when no query is concurrently
-    * executing — runner shutdown, test teardown, server stop.
-    */
-  def drainAll(): Unit = {
-    val it = tracked.iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      it.remove(); e._2.unpersist(blocking = false)
-    }
-    val itR = trackedRdds.iterator()
-    while (itR.hasNext) {
-      val e = itR.next()
-      itR.remove(); Ckpt.release(e._2)
-    }
-  }
-
   /** Number of currently-tracked (still-persisted) frames — lets runners
     * and specs observe orphaned registrations instead of leaking silently.
     */

@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
   * Rules (same order as the reference):
   *   1. regular prefixes -> digits 10..14 of the DOI, left-stripped of zeros
   *   2. three hardcoded irregular prefixes
-  *   3. EPJ-family / CPHA prefixes -> resolvable only via the issn-keyed
-  *      cache (journal_ids.json; the reference's HTTP landing-page fallback
-  *      stays outside the engine) — this function returns NULL for those,
-  *      callers coalesce with a broadcast-joined cache column.
+  *   3. EPJ-family / CPHA prefixes (10.1140, 10.17269) -> resolvable only
+  *      via the issn-keyed cache (journal_ids.json; the reference's HTTP
+  *      landing-page fallback stays outside the engine) — this function
+  *      returns NULL for those, callers coalesce with a broadcast-joined
+  *      cache column.
   *   4. anything else is not a Springer DOI -> NULL (the reference raises;
   *      strict-mode validation is a separate anti-join step, SURVEY.md B23).
   */
@@ -24,9 +25,6 @@ object SpringerJournalId {
     "10.1007/s", "10.3758/s", "10.1245/s", "10.1617/s", "10.1186/s",
     "10.1208/s", "10.1365/s", "10.1038/s", "10.1057/s", "10.2478/s",
     "10.1557/s")
-
-  /** Prefixes only resolvable via the issn cache (EPJ family, CPHA). */
-  val cacheOnlyPrefixes: Seq[String] = Seq("10.1140", "10.17269")
 
   private def startsWithAny(c: Column, prefixes: Seq[String]): Column =
     prefixes.map(p => c.startsWith(p)).reduce(_ || _)

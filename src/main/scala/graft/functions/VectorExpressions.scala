@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression for the vector hot path (SURVEY.md §7.3:
@@ -106,6 +107,13 @@ object GraftFunctions {
           org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
             args.head, args(1))
         }))
+
+  /** `graft_dot(x, y)`: the codegen'd native dot product ([[DotProduct]]) —
+    * the same sequential summation as the HOF/DuckDB forms, none of the
+    * per-pair array allocation. The session must have the function
+    * registered ([[ensureRegistered]] or [[GraftExtensions]]).
+    */
+  def dot(x: Column, y: Column): Column = call_function("graft_dot", x, y)
 
   /** Idempotent runtime registration on a session's function registry. */
   def ensureRegistered(spark: SparkSession): Unit =

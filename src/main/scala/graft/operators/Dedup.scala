@@ -1098,7 +1098,7 @@ object Dedup {
     // aggregate(zip_with(…)) allocates per pair and runs interpreted —
     // measured 3-4× slower on the all-pairs join
     graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
-    def dot(x: Column, y: Column) = call_function("graft_dot", x, y)
+    import graft.functions.GraftFunctions.dot
     // norms once per ROW (not per pair): cos = dot / (norm_a * norm_b) is
     // the identical double arithmetic to dot/(sqrt(dot_aa)*sqrt(dot_bb)),
     // at a third of the per-pair flops

@@ -143,18 +143,7 @@ object Graph {
     * and the plan degrades to the plain (still exact) closure join —
     * data-adaptive, not tuned to the local corpus.
     */
-  val BloomMaxEdges: Long =
-    // Try-parse (r14 advice): a malformed env value must surface as a
-    // config warning, not as ExceptionInInitializerError on every
-    // subsequent Graph call (this is an object-level val)
-    sys.env.get("SPARK_GRAFT_TRI_BLOOM_MAX_EDGES")
-      .flatMap(v => scala.util.Try(v.toLong).toOption.orElse {
-        System.err.println(s"[graft] ignoring malformed " +
-          s"SPARK_GRAFT_TRI_BLOOM_MAX_EDGES='$v' (want a long); " +
-          "using default 200000000")
-        None
-      })
-      .getOrElse(200000000L)
+  val BloomMaxEdges: Long = 200000000L
 
   private def bloomEdgeFilter(und: DataFrame, cand: DataFrame,
       cu: org.apache.spark.sql.Column,

@@ -2,9 +2,11 @@ package graft.operators
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.GraftFunctions.dot
 
 /** IVF (inverted-file) approximate-nearest-neighbor index — the clustered
   * scale path for similarity search (SURVEY.md §2.C), complementing the
@@ -27,9 +29,6 @@ import org.apache.spark.sql.functions._
   * `graft_dot` expression.
   */
 object Ivf {
-
-  private def dot(x: Column, y: Column): Column =
-    call_function("graft_dot", x, y)
 
   /** K centroids of the vector column as (centroid_id, cvec) — small enough
     * to broadcast (K ≤ a few thousand). Fit on a sample at scale; passing

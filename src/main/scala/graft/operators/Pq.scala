@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.dot
+
 /** Product quantization (Jégou et al., TPAMI 2011) — the memory-bounded
   * ANN path that complements [[Ivf]] (SURVEY.md §2.C): split the vector
   * space into `m` subspaces, k-means each subspace independently
@@ -59,9 +61,6 @@ object Pq {
     } }
     Await.result(Future.sequence(fits), Duration.Inf).reduce(_.unionByName(_))
   }
-
-  private def dot(x: Column, y: Column): Column =
-    call_function("graft_dot", x, y)
 
   /** Encode every item as its per-subspace nearest-centroid codes,
     * EXPLODED as (id, sub, code) — the stageable/partitionable layout; a

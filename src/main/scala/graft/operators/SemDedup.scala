@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.functions.GraftFunctions.dot
 
 /** SemDeDup-style SEMANTIC deduplication (Abbas et al., "SemDeDup: Data-
   * efficient learning at web-scale through semantic deduplication",
@@ -30,9 +32,6 @@ import org.apache.spark.sql.functions._
   * [[Dedup.embeddingPairs]] (all-pairs); this operator is the scale path.
   */
 object SemDedup {
-
-  private def dot(x: Column, y: Column): Column =
-    call_function("graft_dot", x, y)
 
   /** SemDeDup runs K ∝ N (Abbas et al. use K≈10⁵ at web scale): with a
     * FIXED K, within-cluster pair work is N²/K — quadratic in the corpus

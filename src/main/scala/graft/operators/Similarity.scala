@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.dot
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY.md §2.C): brute-force cosine top-k as the exact baseline, and a
   * random-hyperplane LSH bucketed variant as the scale path.
@@ -25,12 +27,6 @@ object Similarity {
     * broadcast); items of any size. Ranking: cosine desc, then item id — a
     * total order, so pagination/repeats are deterministic.
     */
-  /** Codegen'd native dot product (graft.functions.DotProduct) — same
-    * sequential summation as the HOF/DuckDB forms, none of the per-pair
-    * array allocation.
-    */
-  private def dot(x: Column, y: Column): Column = call_function("graft_dot", x, y)
-
   def bruteForceTopK(items: DataFrame, itemId: String, itemVec: String,
       queries: DataFrame, queryId: String, queryVec: String, k: Int): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(items.sparkSession)

@@ -66,14 +66,15 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
   // ---- response cache ---------------------------------------------------
 
   /** LRU response cache for successful GETs. Every endpoint is a pure
-    * function of (request URI, registry contents), so a 200 response can
+    * function of (request URI, registry snapshot), so a 200 response can
     * be replayed byte-identically until the registry changes — entries
-    * are stamped with [[CubeRegistry.generation]] and a reload
-    * (register/unregisterAll bumps it) makes them unreachable without any
-    * coordinated flush. The serving win is the point at scale: the repeat
-    * aggregate page costs a map lookup instead of a Spark job. Access-
-    * ordered LinkedHashMap, capped — ~500-cell JSON bodies are ≤100 KB,
-    * so the cache is bounded at tens of MB of heap.
+    * are stamped with the generation of the snapshot their body was
+    * computed from, and every registry publish bumps it, so a reload makes
+    * them unreachable without any coordinated flush. The serving win is
+    * the point at scale: the repeat aggregate page costs a map lookup
+    * instead of a Spark job. Access-ordered LinkedHashMap, capped —
+    * ~500-cell JSON bodies are ≤100 KB, so the cache is bounded at tens of
+    * MB of heap.
     */
   private val ResponseCacheCap = 512
   private val respCache =
@@ -83,20 +84,16 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
         size() > ResponseCacheCap
     }
 
-  private def cached(key: String): Option[(String, String)] =
+  private def cached(key: String, gen: Long): Option[(String, String)] =
     respCache.synchronized {
       Option(respCache.get(key)).collect {
-        case (g, body, ct) if g == registry.generation => (body, ct)
+        case (g, body, ct) if g == gen => (body, ct)
       }
     }
 
   private def cachePut(key: String, gen: Long, body: String, ct: String): Unit =
     // gen < 0 = the nocache hatch: don't populate either
-    if (gen >= 0) respCache.synchronized {
-      // stamp with the generation read BEFORE the body was computed: a
-      // reload that lands mid-computation leaves the entry already stale
-      respCache.put(key, (gen, body, ct)): Unit
-    }
+    if (gen >= 0) respCache.synchronized(respCache.put(key, (gen, body, ct))): Unit
 
   // ---- drilldown frame cache --------------------------------------------
 
@@ -112,17 +109,17 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
     * entries are evicted past either bound, and a persisted (past-the-cap)
     * frame is never admitted: its request's CacheScope drain releases it.
     * Entries of an older registry generation are unreachable and age
-    * out. `nocache=1` bypasses this cache too (the compute-path hatch).
+    * out. `nocache=1` (`gen` < 0) bypasses this cache too (the
+    * compute-path hatch).
     */
   private val FrameCacheCap = 16
   private val frameCache =
     new java.util.LinkedHashMap[String, Browser.RolledFrame](16, 0.75f, true)
 
-  private def rolledFor(cube: String, b: Browser, q: CubeQuery,
-      noCache: Boolean): Browser.RolledFrame =
-    if (noCache) b.rolledFrame(q)
+  private def rolledFor(b: Browser, gen: Long, q: CubeQuery): Browser.RolledFrame =
+    if (gen < 0) b.rolledFrame(q)
     else {
-      val key = s"${registry.generation}|$cube|${q.cuts}|${q.drilldown}"
+      val key = s"$gen|${b.model.name}|${q.cuts}|${q.drilldown}"
       frameCache.synchronized(Option(frameCache.get(key))).getOrElse {
         // built OUTSIDE the lock: concurrent first-pagers may race the
         // same aggregation (the last one's frame stays) — never a Spark
@@ -158,41 +155,46 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
         ex.sendResponseHeaders(204, -1)
         return
       }
+      // the request's one registry read: the cache stamps and every cube
+      // lookup below come from this snapshot, whatever a reload publishes
+      // meanwhile
+      val snap = registry.snapshot
       val key = ex.getRequestURI.toString
       val params = queryParams(ex)
       // nocache=1: bypass AND don't populate — the debugging/benchmark
       // hatch for measuring the compute path on a warm server
       val noCache = params.get("nocache").contains("1")
-      if (!noCache) cached(key) match {
+      if (!noCache) cached(key, snap.generation) match {
         case Some((body, ct)) => respond(ex, 200, body, ct); return
         case None =>
       }
-      val genAtStart = if (noCache) -1L else registry.generation
+      // both caches key on the snapshot's generation; -1 reads and fills neither
+      val gen = if (noCache) -1L else snap.generation
       val path = ex.getRequestURI.getPath.split('/').toSeq.filter(_.nonEmpty)
       // facts AND aggregate support the cubes `format=csv` rendering
       if (path.length == 3 && path(0) == "cube" &&
           (path(2) == "facts" || path(2) == "aggregate") &&
           params.get("format").contains("csv")) {
-        val csv = if (path(2) == "facts") factsCsv(path(1), params)
-          else aggregateCsv(path(1), params)
-        cachePut(key, genAtStart, csv, "text/csv; charset=utf-8")
+        val b = snap.browser(path(1))
+        val csv = if (path(2) == "facts") factsCsv(b, params) else aggregateCsv(b, gen, params)
+        cachePut(key, gen, csv, "text/csv; charset=utf-8")
         respond(ex, 200, csv, "text/csv; charset=utf-8")
         return
       }
       val body = path match {
-        case Seq("info") => registry.infoJson
-        case Seq("cubes") => registry.listJson
-        case Seq("cube", c, "model") => modelJson(c)
-        case Seq("cube", c, "aggregate") => aggregateJson(c, params)
-        case Seq("cube", c, "facts") => factsJson(c, params)
+        case Seq("info") => snap.infoJson
+        case Seq("cubes") => snap.listJson
+        case Seq("cube", c, "model") => snap.browser(c).model.toJson
+        case Seq("cube", c, "aggregate") => aggregateJson(snap.browser(c), gen, params)
+        case Seq("cube", c, "facts") => factsJson(snap.browser(c), params)
         // fact ids may themselves contain '/' (DOIs): everything after
         // /fact/ is the id
         case Seq("cube", c, "fact", idParts @ _*) if idParts.nonEmpty =>
-          factJson(c, idParts.mkString("/"))
-        case Seq("cube", c, "members", dim) => membersJson(c, dim, params)
+          factJson(snap.browser(c), idParts.mkString("/"))
+        case Seq("cube", c, "members", dim) => membersJson(snap.browser(c), dim, params)
         case _ => throw new NoSuchElementException(s"no such endpoint: ${ex.getRequestURI.getPath}")
       }
-      cachePut(key, genAtStart, body, "application/json; charset=utf-8")
+      cachePut(key, gen, body, "application/json; charset=utf-8")
       respond(ex, 200, body)
     } catch {
       case e: NoSuchElementException => respond(ex, 404, errJson(e))
@@ -233,10 +235,6 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
 
   // ---- endpoints --------------------------------------------------------
 
-  private def modelJson(cube: String): String =
-    registry.model(cube).getOrElse(
-      throw new NoSuchElementException(s"no such cube: $cube")).toJson
-
   /** Cap the client's pagesize at the record limit (slicer.ini:6 parity). */
   private def parseQuery(params: Map[String, String]) = {
     val q = QueryParser.parse(params)
@@ -248,13 +246,12 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
     * [[Browser.rolledFrame]] (an atomic snapshot of summary, cells and
     * total), `<agg>_pct` cells for `share=<agg>`, paged.
     */
-  private def aggregatePage(cube: String, params: Map[String, String])
+  private def aggregatePage(b: Browser, gen: Long, params: Map[String, String])
       : (CubeQuery, Option[String], Browser.AggregateResponse) = {
-    val b = registry.browser(cube)
     val q = parseQuery(params)
     val share = params.get("share").filter(_.nonEmpty)
     share.foreach(requireShareable(b, q, _))
-    val rf = rolledFor(cube, b, q, params.get("nocache").contains("1"))
+    val rf = rolledFor(b, gen, q)
     (q, share, b.pageOf(share.fold(rf)(a => b.withShare(rf, a, s"${a}_pct")), q))
   }
 
@@ -267,8 +264,8 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
     * `<aggregate>_pct`; cell_count counts the cells in THIS response (the
     * page, when paginated), not the unpaged total.
     */
-  private def aggregateJson(cube: String, params: Map[String, String]): String = {
-    val (q, share, r) = aggregatePage(cube, params)
+  private def aggregateJson(b: Browser, gen: Long, params: Map[String, String]): String = {
+    val (q, share, r) = aggregatePage(b, gen, params)
     val cells = jsonRows(r.cells)
     if (share.nonEmpty)
       s"""{"cells":[${cells.mkString(",")}],"cell_count":${cells.length}}"""
@@ -299,14 +296,11 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
   /** `GET /cube/<c>/fact/<id>`: single fact by factKey (comma-separated
     * parts for composite keys); 404 when absent.
     */
-  private def factJson(cube: String, id: String): String = {
-    val b = registry.browser(cube)
+  private def factJson(b: Browser, id: String): String =
     b.fact(id).toJSON.collect().headOption.getOrElse(
-      throw new NoSuchElementException(s"no fact '$id' in cube '$cube'"))
-  }
+      throw new NoSuchElementException(s"no fact '$id' in cube '${b.model.name}'"))
 
-  private def factsJson(cube: String, params: Map[String, String]): String = {
-    val b = registry.browser(cube)
+  private def factsJson(b: Browser, params: Map[String, String]): String = {
     val q = parseQuery(params)
     val rows = q.page match {
       case Some(_) => b.facts(q).toJSON.collect()
@@ -323,8 +317,7 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
     * JSON form serves. Bounded by the record limit, so the driver-side
     * string assembly stays small.
     */
-  private def factsCsv(cube: String, params: Map[String, String]): String = {
-    val b = registry.browser(cube)
+  private def factsCsv(b: Browser, params: Map[String, String]): String = {
     val q = parseQuery(params)
     val frame = b.facts(q.page match {
       case Some(_) => q
@@ -340,8 +333,8 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
     * group count (and the pagesize cap when paginated), so the
     * driver-side string assembly stays small.
     */
-  private def aggregateCsv(cube: String, params: Map[String, String]): String = {
-    val (q, _, r) = aggregatePage(cube, params)
+  private def aggregateCsv(b: Browser, gen: Long, params: Map[String, String]): String = {
+    val (q, _, r) = aggregatePage(b, gen, params)
     val rows = if (q.drilldown.isEmpty) r.summary else r.cells
     csvRender(rows.columns, rows.collect())
   }
@@ -361,8 +354,7 @@ final class GraftServer(val registry: CubeRegistry, port: Int = 0,
     (header +: body).mkString("\r\n")
   }
 
-  private def membersJson(cube: String, dim: String, params: Map[String, String]): String = {
-    val b = registry.browser(cube)
+  private def membersJson(b: Browser, dim: String, params: Map[String, String]): String = {
     val q = parseQuery(params)
     val vals = b.members(dim, q.cuts, q.page, q.after).toJSON.collect()
     s"""{"dimension":${jstr(dim)},"values":[${vals.mkString(",")}]}"""

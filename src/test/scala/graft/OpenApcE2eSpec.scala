@@ -307,6 +307,90 @@ class OpenApcE2eSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$dir2/cubes/openapc.parquet")
       OpenApcMain.reload(spark, reg, s"$dir2/cubes", Nil)
       assert(agg() == 5, "reload did not serve the rebuilt data")
+      // a fresh read of the rewritten path shares the old frame's cache
+      // entry (CacheManager matches plans by sameResult): releasing the
+      // old frames must not uncache the reloaded ones
+      val cached = reg.browser("openapc").df.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }
+      assert(cached.nonEmpty, "the reloaded openapc frame is not cached")
     } finally srv.stop()
+  }
+
+  test("reload storm: every request is served wholly from one version, one bump per reload") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.AtomicBoolean
+    import graft.etl.CubeBuilder
+    import org.apache.spark.sql.functions.col
+    // two rebuilt versions in their own directories: v1 drops Konstanz U
+    // from the two apc cubes the clients read
+    val outputs = CubeBuilder.build(
+      CubeBuilder.readInputs(spark, EtlFixture.create().toString))
+    val dirs = Seq("v0", "v1").map { v =>
+      val d = s"${Files.createTempDirectory(s"graft-storm-$v")}/cubes"
+      CubeBuilder.writeCubes(outputs, d)
+      d
+    }
+    Seq("openapc", "combined").foreach(c => outputs.cubes(c)
+      .filter(col("institution") =!= "Konstanz U")
+      .write.mode("overwrite").parquet(s"${dirs(1)}/$c.parquet"))
+    val reg = new graft.registry.CubeRegistry
+    OpenApcMain.registerAll(spark, reg, dirs(0), Nil)
+    val srv = new GraftServer(reg); srv.start()
+    val paths = Seq("/cube/openapc/aggregate", "/cube/combined/aggregate",
+      "/cube/openapc/aggregate?drilldown=period", "/cube/openapc/aggregate?nocache=1")
+    def fetch(path: String): (Int, String) = {
+      val req = HttpRequest.newBuilder(
+        URI.create(s"http://localhost:${srv.boundPort}$path")).GET().build()
+      val res = client.send(req, HttpResponse.BodyHandlers.ofString())
+      (res.statusCode(), res.body())
+    }
+    def items(body: String): Int =
+      mapper.readTree(body).get("summary").get("apc_num_items").asInt()
+    val stop = new AtomicBoolean(false)
+    try {
+      // each version's answer per cube, served with no reload running
+      val answers = (0 to 1).map { v =>
+        if (v > 0) OpenApcMain.reload(spark, reg, dirs(v), Nil)
+        Seq("openapc", "combined").map(c =>
+          c -> items(fetch(s"/cube/$c/aggregate?nocache=1")._2)).toMap
+      }
+      assert(answers(0)("openapc") == 6 && answers(1)("openapc") == 5)
+      val seen = new ConcurrentLinkedQueue[(String, Int, String)]()
+      val clients = (0 until 4).map { t =>
+        val th = new Thread(() => {
+          var i = t
+          while (!stop.get()) {
+            val path = paths(i % paths.size)
+            val (code, body) =
+              try fetch(path) catch { case e: Exception => (-1, e.toString) }
+            seen.add((path, code, body)); i += 1
+          }
+        })
+        th.setDaemon(true); th.start(); th
+      }
+      val bumps = (2 to 7).map { k =>
+        val (before, at) = (reg.generation, seen.size)
+        OpenApcMain.reload(spark, reg, dirs(k % 2), Nil)
+        val bump = reg.generation - before
+        // 8 more answers: at most 4 were in flight at the swap, so at least
+        // 4 ran on this version
+        val deadline = System.nanoTime() + 60e9.toLong
+        while (seen.size < at + 8 && System.nanoTime() < deadline) Thread.sleep(10)
+        bump
+      }
+      stop.set(true); clients.foreach(_.join())
+      val failed = seen.toArray(Array.empty[(String, Int, String)]).filter(_._2 != 200)
+      assert(failed.length == 0, s"requests failed out of ${seen.size} " +
+        s"(statuses ${failed.map(_._2).distinct.mkString(",")}), first: ${failed.headOption}")
+      seen.forEach { case (path, _, body) =>
+        val cube = if (path.contains("combined")) "combined" else "openapc"
+        assert(answers.exists(_(cube) == items(body)), s"$path served neither version: $body")
+      }
+      assert((0 to 1).forall(v => seen.stream().anyMatch(s =>
+        !s._1.contains("combined") && items(s._3) == answers(v)("openapc"))),
+        "the storm did not serve both versions")
+      assert(bumps.forall(_ == 1), s"generation bumps per reload: $bumps")
+    } finally { stop.set(true); srv.stop() }
   }
 }

@@ -21,9 +21,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The same source scan guards the one session factory: no code in
   * `src/main` or `src/test` but [[graft.engine.GraftSession]] builds a
-  * SparkSession, so the runners and the tests share one configuration —
-  * and the one served aggregate path: `GraftServer` builds no aggregate
-  * body but through `Browser.rolledFrame` → `Browser.pageOf`.
+  * SparkSession, so the runners and the tests share one configuration;
+  * the one served aggregate path: `GraftServer` builds no aggregate
+  * body but through `Browser.rolledFrame` → `Browser.pageOf`; and
+  * `GraftServer`'s one registry read per request.
   */
 class WindowSweepSpec extends AnyFunSuite {
 
@@ -174,6 +175,17 @@ class WindowSweepSpec extends AnyFunSuite {
       .filter(p => java.util.regex.Pattern.compile(p).matcher(src).find())
     assert(calls.isEmpty, s"GraftServer.scala calls $calls: page Browser.rolledFrame instead")
     assert(src.contains("rolledFrame(") && src.contains("pageOf("))
+  }
+
+  test("GraftServer reads the registry once per request: one snapshot") {
+    // a second read can see a later publish than the first, and a body
+    // built from one generation would then be cached under another
+    val src = stripCommentsAndStrings(java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/server/GraftServer.scala")))
+    val reads = "(?<![\\w.])registry\\s*\\.\\s*(\\w+)".r.findAllMatchIn(src)
+      .map(_.group(1)).toList
+    assert(reads == List("snapshot"),
+      s"GraftServer.scala reads registry.$reads: read registry.snapshot once and pass it on")
   }
 
   /** The audited list: file!enclosing-label -> number of unpartitioned
