@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.etl.{CubeBuilder, OpenApcSchemas}
@@ -22,6 +21,10 @@ import graft.etl.{CubeBuilder, OpenApcSchemas}
   *  3. ONLY the affected period partitions of the existing cube are read
   *     back (partition pruning — untouched history is never rewritten),
   *     merged, and dynamically overwritten.
+  *
+  * Steps 1–2 are this object's own; the stream runs on the shared
+  * AvailableNow runner and step 3 is the shared replay-guarded merge
+  * (StreamOps.runBatches / StreamOps.mergePartitions).
   *
   * At 100 TB this is the difference between an O(history) rebuild and an
   * O(new files + touched partitions) upsert: a monthly data drop touches
@@ -48,42 +51,20 @@ object OpenApcRefresh {
     */
   def mergeApcBatch(batch: DataFrame, batchId: Long, lookup: DataFrame,
       cubePath: String): Unit = {
-    require(batchId >= 0, s"batchId must be non-negative, got $batchId")
-    val spark = batch.sparkSession
     val unknown = CubeBuilder.unknownInstitutions(Seq(batch), lookup)
       .collect().map(_.getString(0))
     if (unknown.nonEmpty) throw new IllegalStateException(
       s"institutions missing from institutions.csv: ${unknown.mkString(", ")}")
-    val rows = CubeBuilder.openApcRows(batch, lookup)
-      .withColumn(batchCol, lit(batchId))
-    // the affected-partition list is O(periods in the batch) — tiny
-    val periods = rows.select("period").distinct().collect()
-      .map(_.getString(0)).toSeq
-    if (periods.isEmpty) return
-    val merged =
-      if (!new java.io.File(cubePath).exists()) rows
-      else {
-        // explicit schema: pins the period partition directory values to
-        // string (OpenApcMain.readCube semantics) and resolves _batch_id
-        // to null for base-build files that predate the column
-        val withBatch = StructType(OpenApcSchemas.apc.fields.toSeq :+
-          StructField(batchCol, LongType))
-        val existing = spark.read.schema(withBatch).parquet(cubePath)
-          .filter(col("period").isin(periods: _*)) // partition pruning
-          .withColumn(batchCol, coalesce(col(batchCol), lit(-1L)))
-          // replay guard: drop rows a previously-committed attempt of
-          // THIS batch wrote
-          .filter(col(batchCol) =!= batchId)
-        rows.unionByName(existing)
-      }
-    // materialize BEFORE the write: the merge reads the same path it
-    // overwrites, and Spark (correctly) refuses a write whose plan still
-    // references the target files
-    merged.localCheckpoint(eager = true)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("period")
-      .parquet(cubePath)
+    // explicit schema: pins the period partition directory values to
+    // string (OpenApcMain.readCube semantics) and resolves _batch_id to
+    // null for base-build files that predate the column — kept as −1
+    StreamOps.mergePartitions(
+      CubeBuilder.openApcRows(batch, lookup).withColumn(batchCol, lit(batchId)),
+      batchId, cubePath, partCol = "period", batchCol = batchCol,
+      schema = Some(StructType(OpenApcSchemas.apc.fields.toSeq :+
+        StructField(batchCol, LongType)))) {
+      _.withColumn(batchCol, coalesce(col(batchCol), lit(-1L)))
+    }
   }
 
   /** Drain every unprocessed CSV in `dropDir` into the cube (one file per
@@ -98,17 +79,10 @@ object OpenApcRefresh {
     val lookup = CubeBuilder.institutionLookup(institutions)
     val stringSchema = StructType(OpenApcSchemas.apcCsv.map(f =>
       StructField(f.name, StringType, f.nullable)))
-    val stream = spark.readStream.schema(stringSchema)
-      .option("header", true)
-      .option("maxFilesPerTrigger", 1)
-      .csv(dropDir)
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        mergeApcBatch(b, id, lookup, cubePath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamOps.runBatches(spark.readStream.schema(stringSchema)
+        .option("header", true)
+        .option("maxFilesPerTrigger", 1)
+        .csv(dropDir),
+      Some(checkpointDir)) { (b, id) => mergeApcBatch(b, id, lookup, cubePath) }
   }
 }

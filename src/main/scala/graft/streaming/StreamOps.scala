@@ -1,9 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
+
+import graft.engine.CacheScope
+import graft.engine.Ckpt.BarrierOps
 
 /** Structured-Streaming path (SURVEY.md §7.6) over the `events` table: the
   * reference rebuilds its cubes in full batch (update_olap.sh:12-16); here
@@ -16,6 +22,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `Trigger.AvailableNow` streaming result equals the batch result on the
   * same files. That equivalence is also what makes the op oracle-checkable
   * (DuckDB runs the batch SQL).
+  *
+  * One streaming scaffold: every op is its own transform over four shared
+  * helpers (and [[OpenApcRefresh]] rides the last two):
+  *  - [[parquetStream]] — the parquet file-stream source;
+  *  - [[drain]] — the AvailableNow memory-sink drain of a verification read;
+  *  - [[runBatches]] — the AvailableNow `foreachBatch` runner, optionally
+  *    checkpointed;
+  *  - [[writePartitions]] — the batch-keyed dynamic-partition-overwrite
+  *    write, behind both the `batch_id`-partitioned appends
+  *    ([[batchKeyedStream]]) and the replay-guarded merge
+  *    ([[mergePartitions]]).
+  *
+  * Barrier/drain rule: every materialization barrier goes through
+  * [[graft.engine.Ckpt]], and a barrier is released by the
+  * [[graft.engine.CacheScope.drain]] of the thread that made it. A drained
+  * result is a barrier on the CALLER's thread (its runner drains after the
+  * terminal action); a micro-batch body runs on the stream thread, so the
+  * runner ends every body with `CacheScope.drain()`.
   */
 object StreamOps {
 
@@ -38,6 +62,172 @@ object StreamOps {
     }
   }
 
+  /** The parquet file-stream source every op reads: the directory bridge,
+    * the schema probe a file stream needs up front, an optional
+    * `maxFilesPerTrigger` rate limit (several micro-batches over a
+    * multi-file input), and optional event-ts normalization
+    * ([[graft.Tables.normalizeEventTs]]).
+    */
+  private def parquetStream(spark: SparkSession, path: String,
+      maxFilesPerTrigger: Option[Int] = None,
+      normalizeTs: Boolean = false): DataFrame = {
+    val dir = streamableDir(path)
+    val reader = spark.readStream.schema(spark.read.parquet(dir).schema)
+    val raw = maxFilesPerTrigger
+      .fold(reader)(n => reader.option("maxFilesPerTrigger", n)).parquet(dir)
+    if (normalizeTs) graft.Tables.normalizeEventTs(raw) else raw
+  }
+
+  private val drainSeq = new AtomicLong()
+
+  /** The AvailableNow memory-sink drain every verification read ends in:
+    * run `out` to completion into a memory sink under a generated name,
+    * hand the terminated query to `onFinish` (specs read its progress to
+    * prove multi-batch runs), then put the rows behind a Ckpt barrier and
+    * drop the sink's temp view, so sink names never pile up in a
+    * long-lived session. The barrier also makes the result a plan leaf: a
+    * MemorySink view referenced more than once in one read-time plan
+    * trips analyzer attribute-conflict resolution.
+    */
+  private def drain(out: DataFrame, mode: OutputMode,
+      onFinish: StreamingQuery => Unit = _ => ()): DataFrame = {
+    val spark = out.sparkSession
+    val name = s"graft_drain_${drainSeq.incrementAndGet()}"
+    try {
+      val q = out.writeStream.format("memory").queryName(name)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      onFinish(q)
+      spark.table(name).ckpt()
+    } finally { spark.catalog.dropTempView(name); () }
+  }
+
+  /** The AvailableNow `foreachBatch` runner: run `body` over every
+    * micro-batch of `src` — checkpointed under `checkpointDir` when given,
+    * so a restart resumes from the last committed batch — and return once
+    * the input is drained. Every body ends with `CacheScope.drain()`: the
+    * body runs on the stream thread and CacheScope releases per thread, so
+    * the caller's drain could never reach the body's barriers.
+    */
+  private[streaming] def runBatches(src: DataFrame,
+      checkpointDir: Option[String] = None,
+      mode: OutputMode = OutputMode.Append())(
+      body: (DataFrame, Long) => Unit): Unit = {
+    val w = src.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        try body(batch, batchId) finally CacheScope.drain()
+      }
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+    checkpointDir.fold(w)(d => w.option("checkpointLocation", d))
+      .start().awaitTermination()
+  }
+
+  /** The batch-keyed write: dynamic partition overwrite of `df` into `dir`
+    * by `partCol` — only the partitions `df` holds are replaced, so a
+    * replayed batch rewrites exactly what its earlier attempt wrote.
+    */
+  private def writePartitions(df: DataFrame, partCol: String,
+      dir: String): Unit =
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol)
+      .parquet(dir)
+
+  /** The `batch_id`-partitioned append: each micro-batch's `perBatch` rows
+    * land in their own `batch_id` partition of `outDir` (a replayed batch
+    * overwrites only itself, so retries stay exactly-once without a state
+    * store), and the table is read back here, `batch_id` dropped. `outDir`
+    * holds this run's table: it is emptied first, because dynamic
+    * overwrite replaces only the batch ids THIS run produces and an
+    * earlier run that emitted more micro-batches would leave stale
+    * partitions behind. A run whose batches all produced zero rows wrote
+    * no parquet footers — that is an EMPTY table of the rows' schema, not
+    * an error.
+    */
+  private def batchKeyedStream(src: DataFrame, outDir: String)(
+      perBatch: DataFrame => DataFrame): DataFrame = {
+    removeTree(new java.io.File(outDir))
+    val rowSchema = new AtomicReference[StructType]()
+    runBatches(src) { (batch, batchId) =>
+      val rows = perBatch(batch)
+      rowSchema.set(rows.schema)
+      writePartitions(rows.withColumn("batch_id", lit(batchId)), "batch_id",
+        outDir)
+    }
+    val spark = src.sparkSession
+    try spark.read.parquet(outDir).drop("batch_id")
+    catch { case _: AnalysisException if rowSchema.get != null =>
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        rowSchema.get)
+    }
+  }
+
+  /** The replay-guarded partition merge behind [[mergeCubeBatch]] and
+    * [[OpenApcRefresh.mergeApcBatch]]: `rows` (tagged `batchCol` =
+    * `batchId`) replace the `partCol` partitions they touch, unioned with
+    * those partitions' stored rows minus any an earlier attempt of THIS
+    * batch wrote — so a batch whose overwrite committed but whose
+    * checkpoint commit did not is re-merged without double-counting. Only
+    * the touched partitions are read (pruning, under the caller's pinned
+    * `schema` when given) and rewritten; `prepareExisting` is the caller's
+    * own step over the kept rows. The union goes behind a Ckpt barrier
+    * BEFORE the write: the merge reads the path it overwrites, and Spark
+    * (correctly) refuses a write whose plan still references its target
+    * files.
+    */
+  private[streaming] def mergePartitions(rows: DataFrame, batchId: Long,
+      dir: String, partCol: String, batchCol: String,
+      schema: Option[StructType] = None)(
+      prepareExisting: DataFrame => DataFrame): Unit = {
+    // negative ids are stored-history sentinels (the cube's compacted −1,
+    // APC's base build): a caller passing one would make the replay guard
+    // delete that history
+    require(batchId >= 0, s"batchId must be non-negative, got $batchId")
+    // the affected-partition list is O(partitions in the batch) — tiny
+    val parts = rows.select(partCol).distinct().collect().map(_.get(0)).toSeq
+    if (parts.nonEmpty) {
+      val merged =
+        if (!new java.io.File(dir).exists()) rows
+        else {
+          val reader = rows.sparkSession.read
+          rows.unionByName(prepareExisting(
+            schema.fold(reader)(reader.schema).parquet(dir)
+              .filter(col(partCol).isin(parts: _*)) // partition pruning
+              .filter(!(col(batchCol) <=> batchId)))) // replay guard
+        }
+      writePartitions(merged.ckpt(), partCol, dir)
+    }
+  }
+
+  /** A scratch directory for one stream x-query run,
+    * `<java.io.tmpdir>/graft-<name>-<hash of key>-<pid>`: emptied before
+    * use (every invocation is a fresh run) and removed when the JVM exits.
+    */
+  private[graft] def scratchDir(name: String, key: String): String = {
+    val d = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-$name-${Integer.toHexString(key.hashCode)}-" +
+        ProcessHandle.current().pid())
+    removeTree(d)
+    scratchDirs.add(d)
+    d.toString
+  }
+
+  private lazy val scratchDirs = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+    sys.addShutdownHook(dirs.forEach(d => removeTree(d)))
+    dirs
+  }
+
+  /** Recursive delete; a symlink is removed, never followed. */
+  private def removeTree(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).foreach(_.foreach(removeTree))
+    f.delete(): Unit
+  }
+
   /** Tumbling-window aggregate, batch form: per (window-start, event_type)
     * count + value sum. `window()` keys the shuffle by coarse time bucket —
     * at 100 TB this partitions by (bucket, type), no skew beyond real
@@ -56,20 +246,12 @@ object StreamOps {
     * 1 hour are dropped instead of growing the window map forever.
     */
   def tumblingAggStreaming(spark: SparkSession, eventsDir: String,
-      interval: String, queryName: String = "tumbling"): DataFrame = {
-    val dir = streamableDir(eventsDir)
-    val schema = spark.read.parquet(dir).schema
-    val stream = graft.Tables.normalizeEventTs(
-        spark.readStream.schema(schema).parquet(dir))
-      .withWatermark("ts", "1 hour")
-    val q = tumblingAggBatch(stream, interval)
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      interval: String): DataFrame =
+    drain(tumblingAggBatch(
+        parquetStream(spark, eventsDir, normalizeTs = true)
+          .withWatermark("ts", "1 hour"),
+        interval),
+      OutputMode.Complete())
 
   /** Sliding-window variant (1h window / 30m slide) — same mechanics,
     * overlapping buckets.
@@ -126,11 +308,9 @@ object StreamOps {
     * store scales with |users|, not |events|.
     */
   def sessionizeStreaming(spark: SparkSession, eventsDir: String,
-      gapMinutes: Int, queryName: String = "sessions"): DataFrame = {
+      gapMinutes: Int): DataFrame = {
     import spark.implicits._
-    val dir = streamableDir(eventsDir)
-    val schema = spark.read.parquet(dir).schema
-    val raw = spark.readStream.schema(schema).parquet(dir)
+    val raw = parquetStream(spark, eventsDir)
     val stream = raw
       .select(col("user_id").cast("long").as("user_id"),
         graft.Tables.eventTsMicros(raw).as("ts_us"), // → epoch micros
@@ -164,12 +344,7 @@ object StreamOps {
         closed.map(s => SessionOut(user, s.seq, s.startUs, s.endUs, s.n)).iterator
       })
 
-    val q = out.writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drain(out.toDF(), OutputMode.Append())
       .select(col("user_id"), col("session_seq"),
         timestamp_micros(col("start_us")).as("session_start"),
         timestamp_micros(col("end_us")).as("session_end"),
@@ -198,11 +373,9 @@ object StreamOps {
     * batch than its predecessor stage's completion is not revisited.
     */
   def funnelStreaming(spark: SparkSession, eventsDir: String,
-      stages: Seq[String], queryName: String = "funnel"): DataFrame = {
+      stages: Seq[String]): DataFrame = {
     import spark.implicits._
-    val dir = streamableDir(eventsDir)
-    val schema = spark.read.parquet(dir).schema
-    val raw = spark.readStream.schema(schema).parquet(dir)
+    val raw = parquetStream(spark, eventsDir)
     val stream = raw
       .select(col("user_id").cast("long").as("user_id"),
         graft.Tables.eventTsMicros(raw).as("ts_us"),
@@ -223,12 +396,7 @@ object StreamOps {
         state.update(st)
         Iterator.single(FunnelOut(user, st.idx.toLong))
       })
-    val q = out.writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val per = spark.table(queryName)
+    val per = drain(out.toDF(), OutputMode.Append())
       .groupBy(col("user_id")).agg(max(col("completed")).as("completed"))
     stages.zipWithIndex.map { case (st, i) =>
       per.filter(col("completed") >= (i + 1).toLong)
@@ -256,28 +424,18 @@ object StreamOps {
     * oracle re-derives.
     */
   def intervalJoinStreaming(spark: SparkSession, eventsDir: String,
-      leftType: String, rightType: String, withinMinutes: Int,
-      queryName: String = "ivjoin"): DataFrame = {
-    val dir = streamableDir(eventsDir)
-    val schema = spark.read.parquet(dir).schema
-    def side(tp: String, pfx: String) = {
-      val raw = spark.readStream.schema(schema).parquet(dir)
-      graft.Tables.normalizeEventTs(raw)
+      leftType: String, rightType: String, withinMinutes: Int): DataFrame = {
+    def side(tp: String, pfx: String) =
+      parquetStream(spark, eventsDir, normalizeTs = true)
         .filter(col("event_type") === tp)
         .select(col("user_id").as(s"${pfx}_user"),
           col("event_id").as(s"${pfx}_id"), col("ts").as(s"${pfx}_ts"))
         .withWatermark(s"${pfx}_ts", "30 days")
-    }
     val joined = side(leftType, "v").join(side(rightType, "c"),
       col("v_user") === col("c_user") &&
         col("c_ts") >= col("v_ts") &&
         col("c_ts") <= col("v_ts") + expr(s"INTERVAL $withinMinutes MINUTES"))
-    val q = joined.writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drain(joined, OutputMode.Append())
       .select(col("v_user").as("user_id"), col("v_id").as("left_id"),
         col("c_id").as("right_id"), col("v_ts").as("left_ts"),
         col("c_ts").as("right_ts"))
@@ -295,43 +453,11 @@ object StreamOps {
     * and deriving the non-additive smoother at read is the correct
     * streaming decomposition at any scale.
     */
-  def dailyCountsStreaming(spark: SparkSession, eventsDir: String,
-      queryName: String = "ewma_daily_counts"): DataFrame =
-    drainCells(spark, eventsDir, queryName, None, normalizeTs = true,
-      _.groupBy(col("event_type"), to_date(col("ts")).as("day"))
+  def dailyCountsStreaming(spark: SparkSession, eventsDir: String): DataFrame =
+    drain(parquetStream(spark, eventsDir, normalizeTs = true)
+        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n")),
-      _ => ())
-
-  /** The shared Complete-mode cell-drain scaffold every additive-cell
-    * stream twin rides: probe the parquet schema, open the (optionally
-    * rate-limited) file stream, apply the twin's ONE stateful aggregate,
-    * drain with AvailableNow into a memory sink, and hand back the
-    * bounded cell table. The result is localCheckpoint'd because a
-    * MemorySink view referenced more than once in one read-time plan
-    * trips analyzer attribute-conflict resolution — fixing the drain
-    * protocol HERE fixes every twin at once.
-    */
-  private def drainCells(spark: SparkSession, srcDir: String,
-      queryName: String, maxFilesPerTrigger: Option[Int],
-      normalizeTs: Boolean,
-      transform: DataFrame => DataFrame,
-      onFinish: org.apache.spark.sql.streaming.StreamingQuery => Unit)
-      : DataFrame = {
-    val dir = streamableDir(srcDir)
-    val schema = spark.read.parquet(dir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n)).parquet(dir)
-    val src = if (normalizeTs) graft.Tables.normalizeEventTs(raw) else raw
-    val q = transform(src)
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    onFinish(q)
-    spark.table(queryName).localCheckpoint()
-  }
+      OutputMode.Complete())
 
   /** Stream-maintained per-(source, quality-bin) counts for the x166 PSI
     * read — drift monitoring is the PRODUCTION use of the statistic, so
@@ -347,15 +473,12 @@ object StreamOps {
     * terminated query (specs read progress to prove multi-batch runs).
     */
   def qualityBinCountsStreaming(spark: SparkSession, docsDir: String,
-      queryName: String = "psi_bin_counts",
       maxFilesPerTrigger: Option[Int] = None,
-      onFinish: org.apache.spark.sql.streaming.StreamingQuery => Unit =
-        _ => ()): DataFrame =
-    drainCells(spark, docsDir, queryName, maxFilesPerTrigger,
-      normalizeTs = false,
-      src => graft.ExtensionQueries.qualityBins(src)
+      onFinish: StreamingQuery => Unit = _ => ()): DataFrame =
+    drain(graft.ExtensionQueries
+        .qualityBins(parquetStream(spark, docsDir, maxFilesPerTrigger))
         .groupBy(col("source"), col("bin")).agg(count(lit(1)).as("cc")),
-      onFinish)
+      OutputMode.Complete(), onFinish)
 
   /** Stream-maintained (event_type, day) exact micro-tick daily value
     * sums for the x190 ACF read: the daily series is ADDITIVE (one
@@ -367,15 +490,12 @@ object StreamOps {
     * |types| × |observation-window days|.
     */
   def dailyValueSumsStreaming(spark: SparkSession, eventsDir: String,
-      queryName: String = "acf_daily_sums",
       maxFilesPerTrigger: Option[Int] = None,
-      onFinish: org.apache.spark.sql.streaming.StreamingQuery => Unit =
-        _ => ()): DataFrame =
-    drainCells(spark, eventsDir, queryName, maxFilesPerTrigger,
-      normalizeTs = true,
-      _.groupBy(col("event_type"), to_date(col("ts")).as("day"))
+      onFinish: StreamingQuery => Unit = _ => ()): DataFrame =
+    drain(parquetStream(spark, eventsDir, maxFilesPerTrigger, normalizeTs = true)
+        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(sum(floor(col("value") * 1e6 + lit(0.5)).cast("long")).as("vm")),
-      onFinish)
+      OutputMode.Complete(), onFinish)
 
   /** Stream-maintained per-day A/B experiment cells for the x238 mSPRT
     * read: counts, micro-sums, and decimal sums-of-squares per variant
@@ -387,18 +507,14 @@ object StreamOps {
     * production shape: events stream in, the monitor is re-read daily.
     */
   def abDayCellsStreaming(spark: SparkSession, eventsDir: String,
-      queryName: String = "msprt_day_cells",
       maxFilesPerTrigger: Option[Int] = None,
-      onFinish: org.apache.spark.sql.streaming.StreamingQuery => Unit =
-        _ => ()): DataFrame =
-    drainCells(spark, eventsDir, queryName, maxFilesPerTrigger,
-      normalizeTs = true,
-      src => {
+      onFinish: StreamingQuery => Unit = _ => ()): DataFrame =
+    drain({
         val aggs = graft.ExtensionQueries.abDayCellAggs
-        graft.ExtensionQueries.abDayProject(src)
+        graft.ExtensionQueries.abDayProject(parquetStream(spark, eventsDir,
+            maxFilesPerTrigger, normalizeTs = true))
           .groupBy(col("d")).agg(aggs.head, aggs.tail: _*)
-      },
-      onFinish)
+      }, OutputMode.Complete(), onFinish)
 
   /** Stream-maintained per-source secret-scan cells for the x247 read:
     * because the per-token entropy is a PER-ROW HOF fold (integer
@@ -410,19 +526,15 @@ object StreamOps {
     * on demand.
     */
   def secretCellsStreaming(spark: SparkSession, docsDir: String,
-      queryName: String = "secret_cells",
       maxFilesPerTrigger: Option[Int] = None,
       plantSynthetic: Boolean = true,
-      onFinish: org.apache.spark.sql.streaming.StreamingQuery => Unit =
-        _ => ()): DataFrame =
-    drainCells(spark, docsDir, queryName, maxFilesPerTrigger,
-      normalizeTs = false,
-      src => {
+      onFinish: StreamingQuery => Unit = _ => ()): DataFrame =
+    drain({
         val aggs = graft.ExtensionQueries.secretCellAggs
-        graft.ExtensionQueries.secretTokens(src, plantSynthetic)
+        graft.ExtensionQueries.secretTokens(
+            parquetStream(spark, docsDir, maxFilesPerTrigger), plantSynthetic)
           .groupBy(col("source")).agg(aggs.head, aggs.tail: _*)
-      },
-      onFinish)
+      }, OutputMode.Complete(), onFinish)
 
   /** Stream-maintained (event_type, micro-value) histogram for the x250
     * exact-percentile read: value counts are ADDITIVE, so exact P50/P95/
@@ -432,16 +544,13 @@ object StreamOps {
     * arithmetic is read-time (ExtensionQueries.sloOverValueHist).
     */
   def valueHistStreaming(spark: SparkSession, eventsDir: String,
-      queryName: String = "slo_value_hist",
       maxFilesPerTrigger: Option[Int] = None,
-      onFinish: org.apache.spark.sql.streaming.StreamingQuery => Unit =
-        _ => ()): DataFrame =
-    drainCells(spark, eventsDir, queryName, maxFilesPerTrigger,
-      normalizeTs = true,
-      _.groupBy(col("event_type"),
+      onFinish: StreamingQuery => Unit = _ => ()): DataFrame =
+    drain(parquetStream(spark, eventsDir, maxFilesPerTrigger, normalizeTs = true)
+        .groupBy(col("event_type"),
           floor(col("value") * 1e6 + lit(0.5)).cast("long").as("vm"))
         .agg(count(lit(1)).as("c")),
-      onFinish)
+      OutputMode.Complete(), onFinish)
 
   /** Stream-maintained per-(source, doc-length) histogram for the x258
     * Gini read: the length histogram is ADDITIVE, so a SORT-requiring
@@ -454,12 +563,10 @@ object StreamOps {
     * device applied to a Lorenz-curve functional.
     */
   def docLengthHistStreaming(spark: SparkSession, docsDir: String,
-      queryName: String = "gini_len_hist",
       maxFilesPerTrigger: Option[Int] = None,
-      onFinish: org.apache.spark.sql.streaming.StreamingQuery => Unit =
-        _ => ()): DataFrame =
-    drainCells(spark, docsDir, queryName, maxFilesPerTrigger,
-      normalizeTs = false, docLengthCells, onFinish)
+      onFinish: StreamingQuery => Unit = _ => ()): DataFrame =
+    drain(docLengthCells(parquetStream(spark, docsDir, maxFilesPerTrigger)),
+      OutputMode.Complete(), onFinish)
 
   /** The x255/x258 shared cell transform: per-(source, token-length)
     * counts — ONE definition so the drained twin and the checkpointed
@@ -489,27 +596,14 @@ object StreamOps {
   def docLengthHistMaintained(spark: SparkSession, docsDir: String,
       checkpointDir: String, snapshotDir: String,
       maxFilesPerTrigger: Option[Int] = None,
-      onBatch: Long => Unit = _ => ()): Unit = {
-    val dir = streamableDir(docsDir)
-    val schema = spark.read.parquet(dir).schema
-    val reader = spark.readStream.schema(schema)
-    val raw = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n)).parquet(dir)
-    val q = docLengthCells(raw)
-      .writeStream
-      .foreachBatch { (cells: DataFrame, batchId: Long) =>
-        onBatch(batchId)
-        // materialize before the write: the snapshot overwrite must not
-        // observe its own target (same discipline as mergeCubeBatch)
-        cells.localCheckpoint(eager = true)
-          .write.mode("overwrite").parquet(snapshotDir)
-      }
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      onBatch: Long => Unit = _ => ()): Unit =
+    runBatches(docLengthCells(parquetStream(spark, docsDir, maxFilesPerTrigger)),
+        Some(checkpointDir), OutputMode.Complete()) { (cells, batchId) =>
+      onBatch(batchId)
+      // materialize before the write: the snapshot overwrite must not
+      // observe its own target (same discipline as mergePartitions)
+      cells.ckpt().write.mode("overwrite").parquet(snapshotDir)
+    }
 
   /** Stream-maintained per-source document counts for the x263 DP
     * release: counts are the trivially additive state; the entire DP
@@ -517,14 +611,11 @@ object StreamOps {
     * verbatim with the batch x254 (ExtensionQueries.dpCountRelease).
     */
   def sourceCountsStreaming(spark: SparkSession, docsDir: String,
-      queryName: String = "dp_source_counts",
       maxFilesPerTrigger: Option[Int] = None,
-      onFinish: org.apache.spark.sql.streaming.StreamingQuery => Unit =
-        _ => ()): DataFrame =
-    drainCells(spark, docsDir, queryName, maxFilesPerTrigger,
-      normalizeTs = false,
-      _.groupBy(col("source")).agg(count(lit(1)).as("n")),
-      onFinish)
+      onFinish: StreamingQuery => Unit = _ => ()): DataFrame =
+    drain(parquetStream(spark, docsDir, maxFilesPerTrigger)
+        .groupBy(col("source")).agg(count(lit(1)).as("n")),
+      OutputMode.Complete(), onFinish)
 
   /** Stream-maintained per-micro-value cohort counts for the x167 W₁
     * read: the additive (vm, ca, cb) table accumulates in one stateful
@@ -534,17 +625,14 @@ object StreamOps {
     * [[qualityBinCountsStreaming]].
     */
   def valueCohortCountsStreaming(spark: SparkSession, eventsDir: String,
-      queryName: String = "w1_value_counts",
       maxFilesPerTrigger: Option[Int] = None,
-      onFinish: org.apache.spark.sql.streaming.StreamingQuery => Unit =
-        _ => ()): DataFrame =
-    drainCells(spark, eventsDir, queryName, maxFilesPerTrigger,
-      normalizeTs = true,
-      src => graft.ExtensionQueries.valueCohorts(src)
+      onFinish: StreamingQuery => Unit = _ => ()): DataFrame =
+    drain(graft.ExtensionQueries.valueCohorts(parquetStream(spark, eventsDir,
+          maxFilesPerTrigger, normalizeTs = true))
         .groupBy(col("vm"))
         .agg(sum(when(col("isA"), 1L).otherwise(0L)).as("ca"),
           sum(when(!col("isA"), 1L).otherwise(0L)).as("cb")),
-      onFinish)
+      OutputMode.Complete(), onFinish)
 
   /** Stream-STATIC enrichment join + aggregate: the streaming analogue of
     * the B5 broadcast dimension join — each micro-batch joins the live
@@ -555,25 +643,14 @@ object StreamOps {
     * aggregate, keyed on the (dim-attr, type) group key.
     */
   def enrichedCountStreaming(spark: SparkSession, eventsDir: String,
-      dim: DataFrame, dimKey: String, dimAttr: String,
-      queryName: String = "enriched"): DataFrame = {
-    val dir = streamableDir(eventsDir)
-    val schema = spark.read.parquet(dir).schema
-    val stream = graft.Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(dir))
-    val out = stream
-      .join(broadcast(dim.select(col(dimKey).as("__k"), col(dimAttr))),
-        col("user_id") === col("__k"))
-      .groupBy(col(dimAttr), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val q = out.writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+      dim: DataFrame, dimKey: String, dimAttr: String): DataFrame =
+    drain(parquetStream(spark, eventsDir, normalizeTs = true)
+        .join(broadcast(dim.select(col(dimKey).as("__k"), col(dimAttr))),
+          col("user_id") === col("__k"))
+        .groupBy(col(dimAttr), col("event_type"))
+        .agg(count(lit(1)).as("n")),
+      OutputMode.Complete())
       .orderBy(col(dimAttr), col("event_type"))
-  }
 
   /** Streaming exact deduplication: the x05 dedup-group aggregate as a
     * stateful streaming query — per content fingerprint, the smallest id
@@ -588,22 +665,13 @@ object StreamOps {
     * window, trading global dedup for windowed dedup.
     */
   def dedupStreaming(spark: SparkSession, docsDir: String,
-      idCol: String, textCol: String,
-      queryName: String = "dedup_groups"): DataFrame = {
-    val dir = streamableDir(docsDir)
-    val schema = spark.read.parquet(dir).schema
-    val out = spark.readStream.schema(schema).parquet(dir)
-      .select(col(idCol),
-        graft.functions.TextFunctions.fingerprint(col(textCol)).as("fingerprint"))
-      .groupBy(col("fingerprint"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
-    val q = out.writeStream.format("memory").queryName(queryName)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      idCol: String, textCol: String): DataFrame =
+    drain(parquetStream(spark, docsDir)
+        .select(col(idCol),
+          graft.functions.TextFunctions.fingerprint(col(textCol)).as("fingerprint"))
+        .groupBy(col("fingerprint"))
+        .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups")),
+      OutputMode.Complete())
 
   /** STREAMING incremental near-dup dedup: every micro-batch of arriving
     * documents is checked against a static corpus [[graft.operators.Dedup
@@ -621,47 +689,14 @@ object StreamOps {
       idCol: String, textCol: String,
       corpus: graft.operators.Dedup.MinhashIndex, threshold: Double,
       pairsDir: String, where: Column = lit(true),
-      maxFilesPerTrigger: Option[Int] = None,
-      queryName: String = "incr_dedup"): DataFrame = {
-    val dir = streamableDir(docsDir)
-    val schema = spark.read.parquet(dir).schema
-    val reader = spark.readStream.schema(schema)
-    val q = maxFilesPerTrigger.fold(reader)(n =>
-        reader.option("maxFilesPerTrigger", n))
-      .parquet(dir)
-      .filter(where)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val idx = graft.operators.Dedup.minhashIndex(batch, idCol, textCol,
-          corpus.k, corpus.numBands, corpus.rowsPerBand)
-        // batch_id-partitioned append: a replayed batch overwrites ONLY its
-        // own partition (dynamic overwrite), so retries stay exactly-once —
-        // the same replay guard the incremental cube uses
-        graft.operators.Dedup.minhashPairsBetween(idx, corpus, threshold)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(pairsDir)
-        graft.engine.CacheScope.drain()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    // a run whose batches all found zero pairs wrote no parquet footers —
-    // that is an EMPTY pair table, not an error
-    try spark.read.parquet(pairsDir).drop("batch_id")
-    catch { case _: org.apache.spark.sql.AnalysisException =>
-      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id_new", schema(idCol).dataType),
-          org.apache.spark.sql.types.StructField("id_corpus", schema(idCol).dataType),
-          org.apache.spark.sql.types.StructField("jaccard",
-            org.apache.spark.sql.types.DoubleType))))
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    batchKeyedStream(
+        parquetStream(spark, docsDir, maxFilesPerTrigger).filter(where),
+        pairsDir) { batch =>
+      val idx = graft.operators.Dedup.minhashIndex(batch, idCol, textCol,
+        corpus.k, corpus.numBands, corpus.rowsPerBand)
+      graft.operators.Dedup.minhashPairsBetween(idx, corpus, threshold)
     }
-  }
 
   /** STREAMING ANN index maintenance: each arriving micro-batch of
     * embedding rows is coarse-assigned against the FITTED centroids
@@ -686,36 +721,15 @@ object StreamOps {
       idCol: String, vecCol: String, centroids: DataFrame,
       codebooks: DataFrame, dim: Int, m: Int, indexDir: String,
       prep: DataFrame => DataFrame = identity,
-      maxFilesPerTrigger: Option[Int] = None,
-      queryName: String = "index_maint"): DataFrame = {
-    val dir = streamableDir(itemsDir)
-    val schema = spark.read.parquet(dir).schema
-    val reader = spark.readStream.schema(schema)
-    val q = maxFilesPerTrigger.fold(reader)(n =>
-        reader.option("maxFilesPerTrigger", n))
-      .parquet(dir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val e = prep(batch)
-        val assign = graft.operators.Ivf.assign(e, idCol, vecCol, centroids)
-        val codes = graft.operators.Pq.encode(e, idCol, vecCol, codebooks,
-          dim, m)
-        assign.join(codes, Seq("id"))
-          .select(col("id"), col("centroid_id"), col("sub"), col("code"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(indexDir)
-        graft.engine.CacheScope.drain()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(indexDir).drop("batch_id")
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    batchKeyedStream(parquetStream(spark, itemsDir, maxFilesPerTrigger),
+        indexDir) { batch =>
+      val e = prep(batch)
+      graft.operators.Ivf.assign(e, idCol, vecCol, centroids)
+        .join(graft.operators.Pq.encode(e, idCol, vecCol, codebooks, dim, m),
+          Seq("id"))
+        .select(col("id"), col("centroid_id"), col("sub"), col("code"))
+    }
 
   /** STREAMING count-min sketch maintenance: each arriving micro-batch
     * folds its tokens into its OWN depth×width sketch (the mergeable
@@ -732,43 +746,14 @@ object StreamOps {
     */
   def sketchStream(spark: SparkSession, docsDir: String, textCol: String,
       depth: Int, width: Int, sketchDir: String,
-      maxFilesPerTrigger: Option[Int] = None,
-      queryName: String = "cms_stream"): Array[Long] = {
-    // clear leftovers from a previous run into the same dir: dynamic
-    // overwrite replaces only the batch_ids THIS run produces, so a prior
-    // run that emitted more micro-batches would leave stale partitions
-    // that the merge below would silently sum in
-    val root = new java.io.File(sketchDir)
-    if (root.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(root)
-    }
-    val dir = streamableDir(docsDir)
-    val schema = spark.read.parquet(dir).schema
-    val reader = spark.readStream.schema(schema)
+      maxFilesPerTrigger: Option[Int] = None): Array[Long] = {
     val sketchOf = graft.functions.CountMin.sketchUdaf(depth, width)
-    val q = maxFilesPerTrigger.fold(reader)(n =>
-        reader.option("maxFilesPerTrigger", n))
-      .parquet(dir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.select(explode(
-            graft.functions.TextFunctions.tokens(col(textCol))).as("term"))
-          .agg(sketchOf(col("term")).as("sk"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(sketchDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(sketchDir)
+    batchKeyedStream(parquetStream(spark, docsDir, maxFilesPerTrigger),
+        sketchDir) {
+      _.select(explode(
+          graft.functions.TextFunctions.tokens(col(textCol))).as("term"))
+        .agg(sketchOf(col("term")).as("sk"))
+    }
       .select(posexplode(col("sk")).as(Seq("pos", "v")))
       .groupBy(col("pos")).agg(sum(col("v")).as("v"))
       .orderBy(col("pos"))
@@ -804,66 +789,34 @@ object StreamOps {
     */
   def incrementalCubeMaintenance(spark: SparkSession, eventsDir: String,
       cubeDir: String, checkpointDir: String,
-      onMerged: Long => Unit = _ => ()): Unit = {
-    val dir = streamableDir(eventsDir)
-    val schema = spark.read.parquet(dir).schema
-    val raw = spark.readStream.schema(schema)
-      // bounded batches: exercise several foreachBatch merges, not one
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-    val stream = graft.Tables.normalizeEventTs(raw)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeCubeBatch(batch, batchId, cubeDir)
-        // fires AFTER the merge committed but BEFORE Spark writes the
-        // batch's checkpoint commit — the fault-injection point for the
-        // torn-state crash the replay guard exists for (StreamingSpec
-        // kills here and proves the replayed merge dedupes)
-        onMerged(batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      onMerged: Long => Unit = _ => ()): Unit =
+    // bounded batches: exercise several foreachBatch merges, not one
+    runBatches(parquetStream(spark, eventsDir, Some(1), normalizeTs = true),
+        Some(checkpointDir)) { (batch, batchId) =>
+      mergeCubeBatch(batch, batchId, cubeDir)
+      // fires AFTER the merge committed but BEFORE Spark writes the
+      // batch's checkpoint commit — the fault-injection point for the
+      // torn-state crash the replay guard exists for (StreamingSpec
+      // kills here and proves the replayed merge dedupes)
+      onMerged(batchId)
+    }
 
   /** One idempotent micro-batch merge (see [[incrementalCubeMaintenance]]).
     * Public so the replay path is directly testable: calling this twice
     * with the same batchId must leave the cube unchanged.
     */
-  def mergeCubeBatch(batch: DataFrame, batchId: Long, cubeDir: String): Unit = {
-    // -1 is the internal compaction sentinel; a caller passing it would
-    // make the replay guard delete all compacted history
-    require(batchId >= 0, s"batchId must be non-negative, got $batchId")
-    val partial = batch
-      .withColumn("day", to_date(col("ts")))
-      .groupBy(col("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum"))
-      .withColumn("batch_id", lit(batchId))
-    val spark2 = batch.sparkSession
-    val days = partial.select("day").distinct().collect().map(_.get(0))
-    val merged =
-      if (!new java.io.File(cubeDir).exists() || days.isEmpty) partial
-      else {
-        val existing = spark2.read.parquet(cubeDir)
-          .filter(col("day").isin(days.toSeq: _*)) // partition pruning
-          // replay guard: drop any rows a previously-committed attempt of
-          // THIS batch wrote, then compact the (final) rest to batch_id −1
-          .filter(col("batch_id") =!= batchId)
-          .groupBy(col("day"), col("event_type"))
-          .agg(sum(col("n")).as("n"), sum(col("value_sum")).as("value_sum"))
-          .withColumn("batch_id", lit(-1L))
-        partial.unionByName(existing)
-      }
-    // localCheckpoint: materialize BEFORE the write — the merge reads
-    // the same path it overwrites, and Spark (correctly) refuses a
-    // write whose plan still references the target files
-    merged.localCheckpoint(eager = true)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day")
-      .parquet(cubeDir)
-  }
+  def mergeCubeBatch(batch: DataFrame, batchId: Long, cubeDir: String): Unit =
+    mergePartitions(
+      batch.withColumn("day", to_date(col("ts")))
+        .groupBy(col("day"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum"))
+        .withColumn("batch_id", lit(batchId)),
+      batchId, cubeDir, partCol = "day", batchCol = "batch_id") {
+      // every other batch_id present is final: compact it to batch_id −1
+      _.groupBy(col("day"), col("event_type"))
+        .agg(sum(col("n")).as("n"), sum(col("value_sum")).as("value_sum"))
+        .withColumn("batch_id", lit(-1L))
+    }
 
   /** The cube as readers consume it: per-batch partials aggregated away. */
   def readCube(spark: SparkSession, cubeDir: String): DataFrame =

@@ -13,8 +13,7 @@ class StreamingSpec extends SparkSpec {
   private lazy val events = Tables.events(spark, sf())
 
   test("tumbling streaming agg == batch agg (AvailableNow drain)") {
-    val stream = StreamOps.tumblingAggStreaming(spark, eventsDir, "1 hour",
-      queryName = "t_spec")
+    val stream = StreamOps.tumblingAggStreaming(spark, eventsDir, "1 hour")
     val batch = StreamOps.tumblingAggBatch(events, "1 hour")
     assert(stream.count() > 0)
     assert(stream.exceptAll(batch).isEmpty && batch.exceptAll(stream).isEmpty)
@@ -32,7 +31,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming sessionization emits exactly the closed batch sessions") {
     val batch = StreamOps.sessionizeBatch(events, gapMinutes = 30)
     val streamed = StreamOps.sessionizeStreaming(spark, eventsDir,
-      gapMinutes = 30, queryName = "s_spec")
+      gapMinutes = 30)
     val expected = StreamOps.batchWithoutOpenTails(batch)
     val missing = expected.exceptAll(streamed).count()
     val extra = streamed.exceptAll(expected).count()
@@ -46,8 +45,7 @@ class StreamingSpec extends SparkSpec {
     val batch = graft.operators.EventAnalytics
       .funnel(events, "user_id", "event_type", "ts", stages)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-    val streamed = StreamOps.funnelStreaming(spark, eventsDir, stages,
-      queryName = "funnel_spec")
+    val streamed = StreamOps.funnelStreaming(spark, eventsDir, stages)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
     assert(streamed == batch,
       s"stream/batch funnel mismatch: $streamed vs $batch")
@@ -87,8 +85,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream interval join == batch interval join") {
     val streamed = StreamOps.intervalJoinStreaming(spark, eventsDir,
-      leftType = "view", rightType = "click", withinMinutes = 30,
-      queryName = "ivjoin_spec")
+      leftType = "view", rightType = "click", withinMinutes = 30)
     val v = events.filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("left_id"),
         col("ts").as("left_ts"))
@@ -106,7 +103,7 @@ class StreamingSpec extends SparkSpec {
   test("stream-static enrichment == batch broadcast join + aggregate") {
     val dim = Tables.table(spark, sf(), "customer")
     val streamed = StreamOps.enrichedCountStreaming(spark, eventsDir,
-      dim, "c_custkey", "c_mktsegment", queryName = "enrich_spec")
+      dim, "c_custkey", "c_mktsegment")
     val batch = events
       .join(dim.select(col("c_custkey"), col("c_mktsegment")),
         col("user_id") === col("c_custkey"))
@@ -119,7 +116,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming dedup == batch dedup groups") {
     val docs = Tables.table(spark, sf(), "documents")
     val streamed = StreamOps.dedupStreaming(spark,
-      s"${sf()}/documents.parquet", "doc_id", "text", queryName = "spec_dedup")
+      s"${sf()}/documents.parquet", "doc_id", "text")
     val batch = graft.operators.Dedup.exactGroups(docs, "doc_id", "text")
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
@@ -137,8 +134,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$tmp/batchdocs")
     val streamed = graft.streaming.StreamOps.incrementalDedupStream(spark,
       s"$tmp/batchdocs", "doc_id", "text", corpus, threshold = 0.8,
-      pairsDir = s"$tmp/pairs", maxFilesPerTrigger = Some(1),
-      queryName = "spec_incr_dedup")
+      pairsDir = s"$tmp/pairs", maxFilesPerTrigger = Some(1))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batchIdx = graft.operators.Dedup.minhashIndex(
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", k = 3)
@@ -165,7 +161,7 @@ class StreamingSpec extends SparkSpec {
       indexDir = s"$tmp/index",
       prep = b => b.withColumn("vec",
         transform(col("embedding"), x => x.cast("double"))),
-      maxFilesPerTrigger = Some(1), queryName = "spec_index_maint")
+      maxFilesPerTrigger = Some(1))
       .collect().map(r => (r.getLong(0), r.getInt(2)) ->
         ((r.getLong(1), r.getLong(3)))).toMap
     val batch = graft.operators.Ivf.assign(e, "vec_id", "vec", centroids)
@@ -188,7 +184,7 @@ class StreamingSpec extends SparkSpec {
     docs.repartition(3).write.mode("overwrite").parquet(s"$tmp/docs")
     val streamed = StreamOps.sketchStream(spark, s"$tmp/docs", "text",
       depth = 4, width = 256, sketchDir = s"$tmp/sketches",
-      maxFilesPerTrigger = Some(1), queryName = "spec_cms")
+      maxFilesPerTrigger = Some(1))
     val batch = docs
       .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("term"))
       .agg(graft.functions.CountMin.sketchUdaf(4, 256)(col("term")).as("sk"))
@@ -210,7 +206,7 @@ class StreamingSpec extends SparkSpec {
     docs.repartition(3).write.mode("overwrite").parquet(s"$tmp/docs")
     var psiBatches = 0
     val psiCounts = StreamOps.qualityBinCountsStreaming(spark, s"$tmp/docs",
-      queryName = "spec_psi_bins", maxFilesPerTrigger = Some(1),
+      maxFilesPerTrigger = Some(1),
       onFinish = q => psiBatches = q.recentProgress.count(_.numInputRows > 0))
     assert(psiBatches > 1, s"expected multiple micro-batches, got $psiBatches")
     val psiBatch = ExtensionQueries.qualityBins(docs)
@@ -224,7 +220,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$tmp/events")
     var w1Batches = 0
     val w1Counts = StreamOps.valueCohortCountsStreaming(spark, s"$tmp/events",
-      queryName = "spec_w1_counts", maxFilesPerTrigger = Some(1),
+      maxFilesPerTrigger = Some(1),
       onFinish = q => w1Batches = q.recentProgress.count(_.numInputRows > 0))
     assert(w1Batches > 1, s"expected multiple micro-batches, got $w1Batches")
     val w1Batch = ExtensionQueries.valueCohorts(events)
@@ -243,7 +239,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$tmp/events")
     var nBatches = 0
     val streamed = StreamOps.dailyValueSumsStreaming(spark, s"$tmp/events",
-      queryName = "spec_acf_daily", maxFilesPerTrigger = Some(1),
+      maxFilesPerTrigger = Some(1),
       onFinish = q => nBatches = q.recentProgress.count(_.numInputRows > 0))
     assert(nBatches > 1, s"expected multiple micro-batches, got $nBatches")
     val batch = events
@@ -266,7 +262,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$tmp/events")
     var nBatches = 0
     val streamed = StreamOps.abDayCellsStreaming(spark, s"$tmp/events",
-      queryName = "spec_msprt_cells", maxFilesPerTrigger = Some(1),
+      maxFilesPerTrigger = Some(1),
       onFinish = q => nBatches = q.recentProgress.count(_.numInputRows > 0))
     assert(nBatches > 1, s"expected multiple micro-batches, got $nBatches")
     val aggs = ExtensionQueries.abDayCellAggs
@@ -284,7 +280,7 @@ class StreamingSpec extends SparkSpec {
     docs.repartition(3).write.mode("overwrite").parquet(s"$tmp/documents")
     var nBatches = 0
     val streamed = StreamOps.secretCellsStreaming(spark, s"$tmp/documents",
-      queryName = "spec_secret_cells", maxFilesPerTrigger = Some(1),
+      maxFilesPerTrigger = Some(1),
       onFinish = q => nBatches = q.recentProgress.count(_.numInputRows > 0))
     assert(nBatches > 1, s"expected multiple micro-batches, got $nBatches")
     val aggs = ExtensionQueries.secretCellAggs
@@ -303,7 +299,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$tmp/events")
     var nBatches = 0
     val streamed = StreamOps.valueHistStreaming(spark, s"$tmp/events",
-      queryName = "spec_slo_hist", maxFilesPerTrigger = Some(1),
+      maxFilesPerTrigger = Some(1),
       onFinish = q => nBatches = q.recentProgress.count(_.numInputRows > 0))
     assert(nBatches > 1, s"expected multiple micro-batches, got $nBatches")
     val batch = events
@@ -393,5 +389,36 @@ class StreamingSpec extends SparkSpec {
     assert(cube.count() == batch.count())
     assert(cube.exceptAll(batch).isEmpty && batch.exceptAll(cube).isEmpty,
       "post-crash cube drifted from the full batch rebuild")
+  }
+
+  test("multi-batch runners release every micro-batch barrier: no persisted RDD outlives the run") {
+    val sc = spark.sparkContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft-release").toString
+    // several files + maxFilesPerTrigger=1 → several micro-batches each,
+    // every one of which makes barriers on the stream thread
+    events.repartition(4).write.parquet(s"$tmp/events")
+    val docs = Tables.table(spark, sf(), "documents")
+    docs.filter(col("doc_id") % 2 === 1).repartition(3)
+      .write.parquet(s"$tmp/docs")
+    val corpus = graft.operators.Dedup.minhashIndex(
+      docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", k = 3)
+    // the corpus index is this thread's: materialize its persisted frames
+    // now, so only what the stream threads make is measured
+    corpus.bands.count(); corpus.shingles.count()
+    val before = sc.getPersistentRDDs.size
+    StreamOps.incrementalCubeMaintenance(spark,
+      s"$tmp/events", s"$tmp/cube", s"$tmp/ckpt")
+    assert(committedBatches(s"$tmp/ckpt").size > 1)
+    val afterCube = sc.getPersistentRDDs.size
+    assert(afterCube <= before,
+      s"persisted RDDs grew $before → $afterCube over the cube merges")
+    val pairs = StreamOps.incrementalDedupStream(spark, s"$tmp/docs",
+      "doc_id", "text", corpus, threshold = 0.8, pairsDir = s"$tmp/pairs",
+      maxFilesPerTrigger = Some(1))
+    assert(pairs.count() > 0)
+    val after = sc.getPersistentRDDs.size
+    graft.engine.CacheScope.drain()
+    assert(after <= before,
+      s"persisted RDDs grew $before → $after over the multi-batch runs")
   }
 }

@@ -24,7 +24,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * SparkSession, so the runners and the tests share one configuration;
   * the one served aggregate path: `GraftServer` builds no aggregate
   * body but through `Browser.rolledFrame` → `Browser.pageOf`; and
-  * `GraftServer`'s one registry read per request.
+  * `GraftServer`'s one registry read per request; and the one streaming
+  * scaffold: the streaming package opens streams and sinks only in
+  * `StreamOps`' shared helpers (plus the CSV drop), and no file but
+  * `Ckpt.scala` makes a barrier with a raw `localCheckpoint`.
   */
 class WindowSweepSpec extends AnyFunSuite {
 
@@ -186,6 +189,25 @@ class WindowSweepSpec extends AnyFunSuite {
       .map(_.group(1)).toList
     assert(reads == List("snapshot"),
       s"GraftServer.scala reads registry.$reads: read registry.snapshot once and pass it on")
+  }
+
+  test("one streaming scaffold: one source, one drain, one runner; every barrier through Ckpt") {
+    def code(f: java.nio.file.Path) =
+      stripCommentsAndStrings(java.nio.file.Files.readString(f))
+    def sites(files: List[java.nio.file.Path], pat: String) = files.flatMap { f =>
+      pat.r.findAllMatchIn(code(f)).map(_ => f.getFileName.toString)
+    }
+    val streaming = scalaFiles(java.nio.file.Paths.get("src/main/scala/graft/streaming"))
+    // StreamOps.parquetStream and OpenApcRefresh's CSV drop
+    val reads = sites(streaming, "\\breadStream\\b")
+    assert(reads.size <= 2, s"readStream sites $reads: open parquet streams with StreamOps.parquetStream")
+    // StreamOps.drain and StreamOps.runBatches
+    val writes = sites(streaming, "\\bwriteStream\\b")
+    assert(writes.size <= 2, s"writeStream sites $writes: drain or runBatches instead")
+    val raw = sites(scalaFiles(java.nio.file.Paths.get("src/main/scala")),
+      "\\blocalCheckpoint\\s*\\(").distinct
+    assert(raw.forall(_ == "Ckpt.scala"),
+      s"localCheckpoint( in $raw: make barriers with graft.engine.Ckpt")
   }
 
   /** The audited list: file!enclosing-label -> number of unpartitioned
